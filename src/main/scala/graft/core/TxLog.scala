@@ -3,6 +3,9 @@ package graft.core
 import java.io.File
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import LogAction.{Add, AddField, Constraint, CopySrc, Dv, Dvf, Feature,
+  Keyed, NoDataChange, Part, Property, Remove, Schema, Ts, TxTables, Txn,
+  Unconstraint, UncopySrc, Unproperty, Xref, escapeVal, unescapeVal}
 
 /** A minimal lakehouse TRANSACTION LOG (the Delta/Iceberg core idea,
   * built from first principles on plain parquet + an append-only log of
@@ -25,16 +28,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - CHANGE DATA FEED: a version's delta IS its add/remove file
   *     lists — incremental consumers read only those files (q375).
   *
-  * Log entries are newline-delimited `add\t<file>` / `remove\t<file>` /
-  * `dv\t<file>\t<positions>` / `dvf\t<file>\t<sidecar>` lines named
-  * `<version %08d>.txt` under `_log/`. At 100 TB the log is file-grain
+  * Log entries are files named `<version %08d>.txt` under `_log/`,
+  * one action per line: data files added and removed, deletion vectors,
+  * idempotency markers, constraints, properties, the schema and the
+  * rest. [[LogAction]] is the grammar's single definition — every line
+  * is built by its encoder and read back by its decoder, and this
+  * object works on typed actions only. At 100 TB the log is file-grain
   * metadata (KBs per commit for thousands of data files); replay cost
   * is bounded by CHECKPOINTS — every [[CheckpointInterval]]-th commit
   * also writes `<version>.checkpoint` holding the fully-replayed state
-  * (live add lines verbatim, outstanding DVs, txn markers), and every
-  * reader starts from the nearest checkpoint at or below its version,
-  * so replay is O(interval) raw entries regardless of table age (the
-  * Delta `_last_checkpoint` shape). */
+  * ([[LogState.serialize]]: live adds with their markers, outstanding
+  * DVs, txn markers, metadata), and every reader starts from the
+  * nearest checkpoint at or below its version, so replay is
+  * O(interval) raw entries regardless of table age (the Delta
+  * `_last_checkpoint` shape). */
 object TxLog {
 
   private def logDir(dir: String): File = new File(dir, "_log")
@@ -56,7 +63,8 @@ object TxLog {
     * rename() window would let two racing writers both "win" and one
     * silently overwrite the other (ADVICE r8). Exactly one writer per
     * version; the loser gets ConcurrentModificationException. */
-  private def claimVersion(dir: String, v: Int, lines: Seq[String]): Int = {
+  private def claimVersion(dir: String, v: Int,
+      actions: Seq[LogAction]): Int = {
     logDir(dir).mkdirs()
     val tmp = Files.createTempFile(logDir(dir).toPath, s".commit-$v-", ".tmp")
     // Every commit records its instant as a `ts` line INSIDE the entry
@@ -64,8 +72,8 @@ object TxLog {
     // timestamp time travel survives copies/rsync/restores that reset
     // file metadata. Readers ignore unknown line types, so pre-ts logs
     // and ts-bearing logs interoperate both ways.
-    val stamped = s"ts\t${System.currentTimeMillis()}" +: lines
-    Files.write(tmp, stamped.mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(tmp,
+      LogAction.render(Ts(System.currentTimeMillis()) +: actions))
     try {
       Files.createLink(versionFile(dir, v), tmp)
       Files.deleteIfExists(tmp)
@@ -97,7 +105,7 @@ object TxLog {
     * the commit lines per attempt, so a racing schema evolution folds
     * into the recorded union schema. */
   private def claimAppendRetrying(spark: SparkSession, dir: String,
-      staged: Seq[String], mkLines: () => Seq[String],
+      staged: Seq[String], mkLines: () => Seq[LogAction],
       maxRetries: Int = 20): Int = {
     var attempt = 0
     while (true) {
@@ -128,7 +136,7 @@ object TxLog {
     * and the replay contract (-1) holds. */
   private def claimTxnRetrying(spark: SparkSession, dir: String,
       staged: Seq[String], app: String, txnId: Long,
-      mkLines: () => Seq[String], maxRetries: Int = 20): Int = {
+      mkLines: () => Seq[LogAction], maxRetries: Int = 20): Int = {
     var attempt = 0
     while (true) {
       val v = currentVersion(dir) + 1
@@ -137,8 +145,7 @@ object TxLog {
         return -1
       }
       appendRaceHook()
-      try return claimVersion(dir, v,
-        mkLines() :+ s"txn\t$app\t$txnId")
+      try return claimVersion(dir, v, mkLines() :+ Txn(app, txnId))
       catch {
         case e: java.util.ConcurrentModificationException =>
           attempt += 1
@@ -163,13 +170,19 @@ object TxLog {
     if (vs.isEmpty) -1 else vs.max
   }
 
-  /** (adds, removes) of one committed version. Field-split: an `add`
-    * line may carry trailing file-statistics fields (see
-    * [[appendWithStats]]) — the file name is always field 1. */
+  /** (added, removed) data files of one committed version. */
   def changes(dir: String, v: Int): (Seq[String], Seq[String]) = {
-    val lines = entryLines(dir, v)
-    (lines.collect { case l if l.startsWith("add\t") => l.split('\t')(1) },
-      lines.collect { case l if l.startsWith("remove\t") => l.split('\t')(1) })
+    val acts = entryActions(dir, v)
+    (acts.collect { case a: Add => a.file }, acts.collect { case Remove(f) => f })
+  }
+
+  /** Is version `v` a pure-remove commit — at least one remove and no
+    * other action besides its instant stamp? The shape of a
+    * metadata-only DELETE or TRUNCATE: files leave the live set with no
+    * data read and nothing rewritten. */
+  private[graft] def removesOnly(dir: String, v: Int): Boolean = {
+    val acts = entryActions(dir, v).filterNot(_.isInstanceOf[Ts])
+    acts.nonEmpty && acts.forall(_.isInstanceOf[Remove])
   }
 
   /** Does version `v` delete rows — remove lines (COW rewrites,
@@ -177,21 +190,23 @@ object TxLog {
     * source's append-only guard: a DV-only commit removes no FILES but
     * still deletes ROWS a tailing consumer already emitted. */
   private[graft] def versionDeletes(dir: String, v: Int): Boolean =
-    entryLines(dir, v).exists(l =>
-      l.startsWith("remove\t") || l.startsWith("dv\t") ||
-        l.startsWith("dvf\t"))
+    entryActions(dir, v).exists {
+      case _: Remove | _: Dv | _: Dvf => true
+      case _ => false
+    }
 
   /** The fully-replayed log state at one version: live files (keyed by
-    * the file field, valued by the VERBATIM add line so stats fields
-    * survive checkpointing), outstanding deletion-vector sources, and
-    * seen txn marker lines. One fold serves every reader —
-    * [[snapshot]], [[fileStats]], [[deletionVectors]], [[txnSeen]] —
-    * and is what a CHECKPOINT serializes. */
+    * the file field, valued by the [[Add]] action so its markers survive
+    * checkpointing), outstanding deletion-vector sources, and seen txn
+    * markers. One fold serves every reader — [[snapshot]],
+    * [[fileStats]], [[deletionVectors]], [[txnSeen]] — and
+    * [[serialize]] is its only writer: checkpoints, RESTORE and both
+    * clones. */
   private final class LogState {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val live = scala.collection.mutable.LinkedHashMap.empty[String, Add]
     val dv = scala.collection.mutable.LinkedHashMap
       .empty[String, (Set[Long], Seq[String])]
-    val txns = scala.collection.mutable.LinkedHashSet.empty[String]
+    val txns = scala.collection.mutable.LinkedHashSet.empty[Txn]
     /** Active table CHECK constraints, name → SQL expression text. */
     val cons = scala.collection.mutable.LinkedHashMap.empty[String, String]
     /** Table properties (TBLPROPERTIES), key → value — pure metadata,
@@ -199,12 +214,12 @@ object TxLog {
     val props = scala.collection.mutable.LinkedHashMap.empty[String, String]
     /** Last recorded table schema (JSON), Delta's metaData action. */
     var schemaJson: Option[String] = None
-    /** Source files already ingested by `COPY INTO` (canonical paths,
-      * escaped in the log) — the idempotent-load ledger: a re-run of
-      * the same COPY INTO skips them. Monotone ingest HISTORY, not
-      * content state: RESTORE leaves it alone (the files were loaded
-      * once, restoring data does not un-load them); REPLACE TABLE
-      * clears it (a new definition owes nothing to the old ingest). */
+    /** Source files already ingested by `COPY INTO` (canonical paths)
+      * — the idempotent-load ledger: a re-run of the same COPY INTO
+      * skips them. Monotone ingest HISTORY, not content state: RESTORE
+      * leaves it alone (the files were loaded once, restoring data does
+      * not un-load them); REPLACE TABLE clears it (a new definition
+      * owes nothing to the old ingest). */
     val copied = scala.collection.mutable.LinkedHashSet.empty[String]
     /** REQUIRED reader features (`feature` lines — Delta's protocol
       * action): a table whose correct interpretation needs machinery
@@ -220,69 +235,63 @@ object TxLog {
       * refuses. */
     var pendingXref: Boolean = false
 
-    /** Apply one version's (or one checkpoint's) lines: removes first —
-      * the commit-line order every writer uses — then adds/dv/txn. */
-    def apply(lines: Seq[String]): Unit = {
-      lines.foreach { l =>
-        if (l.startsWith("remove\t")) { val f = l.substring(7); live -= f; dv -= f }
+    /** Apply one version's (or one checkpoint's) actions: removes
+      * first — the commit order every writer uses — then the rest. */
+    def apply(actions: Seq[LogAction]): Unit = {
+      actions.foreach {
+        case Remove(f) => live -= f; dv -= f
+        case _ => ()
       }
-      lines.foreach { l =>
-        if (l.startsWith("add\t")) live(l.split('\t')(1)) = l
-        else if (l.startsWith("dv\t")) l.split('\t') match {
-          case Array(_, f, ps) =>
-            val (inl, sc) = dv.getOrElse(f, (Set.empty[Long], Seq.empty))
-            dv(f) = (inl ++ ps.split(',').filter(_.nonEmpty).map(_.toLong), sc)
-          case _ => ()
-        }
-        else if (l.startsWith("dvf\t")) l.split('\t') match {
-          case Array(_, f, path) =>
-            val (inl, sc) = dv.getOrElse(f, (Set.empty[Long], Seq.empty))
-            dv(f) = (inl, sc :+ path)
-          case _ => ()
-        }
-        else if (l.startsWith("txn\t")) txns += l: Unit
-        else if (l.startsWith("constraint\t")) l.split('\t') match {
-          case Array(_, n, sql) => cons(unescapeVal(n)) = unescapeVal(sql)
-          case _ => ()
-        }
-        else if (l.startsWith("unconstraint\t"))
-          cons -= unescapeVal(l.substring("unconstraint\t".length)): Unit
-        // limit -1: a plain split drops trailing empty segments, so a
-        // property set to the EMPTY STRING (`property\tk\t`) would parse
-        // as 2 fields and silently vanish on every replay (ADVICE r12 —
-        // the same trap parseAdd's s: markers already guard against)
-        else if (l.startsWith("property\t")) l.split("\t", -1) match {
-          case Array(_, k, v) => props(unescapeVal(k)) = unescapeVal(v)
-          case _ => ()
-        }
-        else if (l.startsWith("unproperty\t"))
-          props -= unescapeVal(l.substring("unproperty\t".length)): Unit
-        else if (l.startsWith("copysrc\t"))
-          copied += unescapeVal(l.substring("copysrc\t".length)): Unit
-        else if (l.startsWith("uncopysrc\t"))
-          copied -= unescapeVal(l.substring("uncopysrc\t".length)): Unit
-        else if (l.startsWith("feature\t"))
-          features += unescapeVal(l.substring("feature\t".length)): Unit
-        else if (l.startsWith("schema\t"))
-          schemaJson = Some(unescapeVal(l.substring("schema\t".length)))
+      actions.foreach {
+        case a: Add => live(a.file) = a
+        case Dv(f, ps) =>
+          val (inl, sc) = dv.getOrElse(f, (Set.empty[Long], Seq.empty))
+          dv(f) = (inl ++ ps, sc)
+        case Dvf(f, path) =>
+          val (inl, sc) = dv.getOrElse(f, (Set.empty[Long], Seq.empty))
+          dv(f) = (inl, sc :+ path)
+        case t: Txn => txns += t
+        case Constraint(n, sql) => cons(n) = sql
+        case Unconstraint(n) => cons -= n
+        case Property(k, v) => props(k) = v
+        case Unproperty(k) => props -= k
+        case CopySrc(src) => copied += src
+        case UncopySrc(src) => copied -= src
+        case Feature(n) => features += n
+        case Schema(j) => schemaJson = Some(j)
+        case _ => ()
       }
     }
 
-    /** The state as checkpoint lines (round-trips through [[apply]]). */
-    def serialize: Seq[String] =
-      live.values.toSeq ++
-        dv.toSeq.flatMap { case (f, (inline, sidecars)) =>
-          (if (inline.nonEmpty)
-            Seq(s"dv\t$f\t${inline.toSeq.sorted.mkString(",")}")
-          else Seq.empty) ++ sidecars.map(sc => s"dvf\t$f\t$sc")
-        } ++ txns.toSeq ++
-        cons.toSeq.map { case (n, sql) =>
-          s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
-        props.toSeq.map { case (k, v) =>
-          s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
-        copied.toSeq.map(s => s"copysrc\t${escapeVal(s)}") ++
-        features.toSeq.map(f => s"feature\t${escapeVal(f)}") ++
-        schemaJson.map(j => s"schema\t${escapeVal(j)}")
+    /** The state as actions (round-trips through [[apply]]): the
+      * [[fileActions]], then the metadata. `path` maps every data-file
+      * and sidecar reference (a clone re-roots them); `forClone` lists
+      * the files by name and drops the txn markers, which belong to the
+      * source's writers, not to a new table. */
+    def serialize(path: String => String = identity,
+        forClone: Boolean = false): Seq[LogAction] =
+      fileActions(path, sorted = forClone) ++
+        (if (forClone) Seq.empty else txns.toSeq) ++
+        cons.toSeq.map { case (n, sql) => Constraint(n, sql) } ++
+        props.toSeq.map { case (k, v) => Property(k, v) } ++
+        copied.toSeq.map(CopySrc) ++
+        features.toSeq.map(Feature) ++
+        schemaJson.map(Schema)
+
+    /** Live adds with their markers verbatim, then the live files'
+      * outstanding deletion vectors — in log order, or by file name
+      * when `sorted`. */
+    def fileActions(path: String => String = identity,
+        sorted: Boolean = false): Seq[LogAction] = {
+      def order[V](m: Iterable[(String, V)]): Seq[(String, V)] =
+        if (sorted) m.toSeq.sortBy(_._1) else m.toSeq
+      order(live).map { case (_, a) => a.copy(file = path(a.file)) } ++
+        order(dv.filter { case (f, _) => live.contains(f) })
+          .flatMap { case (f, (inline, sidecars)) =>
+            (if (inline.nonEmpty) Seq(Dv(path(f), inline.toSeq.sorted))
+            else Seq.empty) ++ sidecars.map(sc => Dvf(path(f), path(sc)))
+          }
+    }
   }
 
   private def checkpointFile(dir: String, v: Int): Path =
@@ -297,41 +306,25 @@ object TxLog {
     if (cs.isEmpty) None else Some(cs.max)
   }
 
-  private def fileLines(p: Path): Seq[String] =
-    new String(Files.readAllBytes(p), "UTF-8")
-      .linesIterator.filter(_.nonEmpty).toSeq
-
-  /** Expand `xref\t<relative tx file>\t<key>` indirection lines (the
-    * multi-table transaction protocol, [[commitAllLines]]): the entry's
-    * effective lines live in a SHARED transaction file, prefixed per
-    * table key — one atomic hard-link of that file is the commit point
-    * for EVERY participating table. A missing tx file means the
-    * transaction never published (writer crashed between claims and
-    * publish): the entry is a permanent no-op hole and resolves to
-    * NOTHING — no reader ever observes one table updated without the
-    * others. `onPending` fires in that case (checkpoint safety). */
-  private def resolveLines(dir: String, lines: Seq[String],
-      onPending: () => Unit = () => ()): Seq[String] =
-    lines.flatMap {
-      case l if l.startsWith("xref\t") =>
-        l.split('\t') match {
-          case Array(_, rel, key) =>
-            val f = new File(dir, rel)
-            if (!f.isFile) { onPending(); Seq.empty }
-            else fileLines(f.toPath).collect {
-              case tl if tl.startsWith(key + "\t") =>
-                tl.substring(key.length + 1)
-            }
-          case _ => Seq.empty
-        }
-      case l => Seq(l)
+  /** One committed version's EFFECTIVE actions, `xref` indirection
+    * resolved (the multi-table transaction protocol,
+    * [[commitAllLines]]): the entry's effective actions live in a
+    * SHARED transaction file, keyed per table — one atomic hard-link of
+    * that file is the commit point for EVERY participating table. A
+    * missing tx file means the transaction never published (writer
+    * crashed between claims and publish): the entry is a permanent
+    * no-op hole and resolves to NOTHING — no reader ever observes one
+    * table updated without the others. `onPending` fires in that case
+    * (checkpoint safety). */
+  private[graft] def entryActions(dir: String, v: Int,
+      onPending: () => Unit = () => ()): Seq[LogAction] =
+    LogAction.read(versionFile(dir, v)).flatMap {
+      case Xref(rel, key) =>
+        val f = new File(dir, rel)
+        if (!f.isFile) { onPending(); Seq.empty }
+        else LogAction.read(f.toPath).collect { case Keyed(`key`, a) => a }
+      case a => Seq(a)
     }
-
-  /** One committed version's EFFECTIVE lines, xref indirection
-    * resolved. */
-  private def entryLines(dir: String, v: Int,
-      onPending: () => Unit = () => ()): Seq[String] =
-    resolveLines(dir, fileLines(versionFile(dir, v)), onPending)
 
   /** Replay through `asOf`, starting from the nearest checkpoint — the
     * O(#commits) driver IO becomes O(interval) once checkpoints exist
@@ -344,11 +337,11 @@ object TxLog {
       s"version $v does not exist (table is at version $cur)")
     val st = new LogState
     val start = latestCheckpoint(dir, v) match {
-      case Some(c) => st.apply(fileLines(checkpointFile(dir, c))); c + 1
+      case Some(c) => st.apply(LogAction.read(checkpointFile(dir, c))); c + 1
       case None => 0
     }
     (start to v).foreach(i =>
-      st.apply(entryLines(dir, i, () => st.pendingXref = true)))
+      st.apply(entryActions(dir, i, () => st.pendingXref = true)))
     // PROTOCOL GATE: a table declaring a reader feature this engine
     // does not implement refuses WHOLE — readers and writers both fold
     // through here, so neither can silently misread or corrupt it.
@@ -383,9 +376,8 @@ object TxLog {
     require(!st.pendingXref,
       s"cannot checkpoint $dir at $v: a multi-table transaction in " +
         "range has not published yet")
-    val body = st.serialize
     val tmp = Files.createTempFile(logDir(dir).toPath, s".ckpt-$v-", ".tmp")
-    Files.write(tmp, body.mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(tmp, LogAction.render(st.serialize()))
     try Files.createLink(checkpointFile(dir, v), tmp)
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
     finally Files.deleteIfExists(tmp): Unit
@@ -412,7 +404,7 @@ object TxLog {
   def commit(dir: String, expected: Int,
       adds: Seq[String], removes: Seq[String]): Int =
     claimVersion(dir, expected + 1,
-      removes.map(f => s"remove\t$f") ++ adds.map(f => s"add\t$f"))
+      removes.map(Remove) ++ adds.map(Add(_)))
 
   /** Stage `df` as uniquely-named parquet files in the table directory
     * (INVISIBLE until a commit references them); returns their names.
@@ -466,43 +458,29 @@ object TxLog {
     val cols = (statsCols ++ statsColumns(dir)).distinct
     val declared = partitionColumns(dir)
     if (declared.nonEmpty) {
-      // declared layout wins: partition-pure files whose add lines
-      // carry BOTH `p:` markers and the zone-map triples (parseAdd
-      // consumes marker fields order-independently)
-      val (staged, pLines) = stagePartitioned(spark, df, dir, declared)
-      val statM = statMarkersFor(spark, dir, staged, cols)
-      val full = staged.zip(pLines).map { case (n, l) =>
-        (l +: statM.getOrElse(n, Seq.empty)).mkString("\t") }
+      // declared layout wins: partition-pure files whose adds carry
+      // BOTH `p:` markers and the zone-map bounds
+      val (staged, pAdds) = stagePartitioned(spark, df, dir, declared)
+      val full = enrichLines(spark, dir, pAdds, cols)
       return claimAppendRetrying(spark, dir, staged,
         () => full ++ schemaLine(df, dir))
     }
     val staged = stageEnforced(df, dir)
     // bounds are content properties of the staged files — computed once;
     // only the schema union re-derives per retry attempt
-    val statLines = statAddLines(spark, dir, staged, cols)
+    val statAdds = enrichLines(spark, dir, staged.map(Add(_)), cols)
     claimAppendRetrying(spark, dir, staged,
-      () => statLines ++ schemaLine(df, dir))
+      () => statAdds ++ schemaLine(df, dir))
   }
 
-  /** Add lines with per-file min/max triples for `statsCols`, computed
-    * in ONE distributed scan over the staged files (a per-file agg job
-    * each would be n driver-sequential jobs on an n-file batch); only
-    * the file-grain bounds map reaches the driver. */
-  private def statAddLines(spark: SparkSession, dir: String,
-      staged: Seq[String], statsCols: Seq[String]): Seq[String] = {
-    val markers = statMarkersFor(spark, dir, staged, statsCols)
-    staged.map { f =>
-      (s"add\t$f" +: markers.getOrElse(new File(f).getName, Seq.empty))
-        .mkString("\t")
-    }
-  }
-
-  /** The marker FIELDS of [[statAddLines]] keyed by staged basename —
-    * for writers that must compose them with other per-file fields on
-    * one add line (a partitioned table's `p:` markers). */
+  /** Per-file zone-map marker fields for `statsCols`, keyed by staged
+    * basename — computed in ONE distributed scan over the staged files
+    * (a per-file agg job each would be n driver-sequential jobs on an
+    * n-file batch); only the file-grain bounds map reaches the
+    * driver. */
   private def statMarkersFor(spark: SparkSession, dir: String,
       staged: Seq[String], statsCols0: Seq[String])
-      : Map[String, Seq[String]] = {
+      : Map[String, Seq[AddField]] = {
     import org.apache.spark.sql.functions.{col, max, min}
     if (statsCols0.isEmpty || staged.isEmpty) return Map.empty
     val src = spark.read.parquet(staged.map(f => s"$dir/$f"): _*)
@@ -528,10 +506,10 @@ object TxLog {
           // an all-NULL column in a file has no bounds — leave the
           // column statless for that file (conservative keep)
           if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-          else if (isStr(c))
-            Some(s"s:${escapeVal(c)}=${escapeVal(r.getString(1 + 2 * i))}=" +
-              escapeVal(r.getString(2 + 2 * i)))
-          else Some(s"$c\t${r.getLong(1 + 2 * i)}\t${r.getLong(2 + 2 * i)}")
+          else if (isStr(c)) Some(LogAction.StrBounds(c,
+            r.getString(1 + 2 * i), r.getString(2 + 2 * i)))
+          else Some(LogAction.Bounds(c,
+            r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)))
         })
       .toMap
     // a staged file can legitimately be EMPTY (a sampled range
@@ -540,99 +518,19 @@ object TxLog {
     bounds
   }
 
-  /** Minimal %xx escaping for partition values stored in log lines:
-    * the characters that would break the line grammar (tab, newline,
-    * carriage return, `=`, `%`). `\r` matters because [[fileLines]]
-    * reads entries with `linesIterator`, which splits on `\r` too — an
-    * unescaped CR in a string zone-map bound would truncate the line at
-    * replay into a still-parseable marker whose `hi` is a strict prefix
-    * of the real max, making [[pruneSnapshot]] silently DROP files that
-    * hold matching rows (ADVICE r10). Spark-side path escaping is
-    * undone before storage, so the log holds the RAW value under this
-    * one scheme. */
-  private[graft] def escapeVal(s: String): String =
-    s.flatMap {
-      case '%'  => "%25"
-      case '\t' => "%09"
-      case '\n' => "%0A"
-      case '\r' => "%0D"
-      case '='  => "%3D"
-      case c    => c.toString
-    }
-
-  private[graft] def unescapeVal(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 3 <= s.length) {
-        try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Parsed trailing fields of one add line: (file, partition values,
-    * stats triples). Grammar (every variant backward compatible — the
-    * file is always field 1): fields after the file are either
-    * `p:<col>=<value>` partition-value markers or `<col>\t<lo>\t<hi>`
-    * numeric zone-map triples. */
-  private[graft] def parseAdd(l: String)
-      : (String, Map[String, String], Map[String, (Long, Long)],
-         Map[String, (String, String)]) = {
-    val fs = l.split('\t')
-    val parts = Map.newBuilder[String, String]
-    val stats = Map.newBuilder[String, (Long, Long)]
-    val strStats = Map.newBuilder[String, (String, String)]
-    var i = 2
-    while (i < fs.length) {
-      val f = fs(i)
-      if (f.startsWith("p:")) {
-        val eq = f.indexOf('=')
-        if (eq > 2) parts += unescapeVal(f.substring(2, eq)) ->
-          unescapeVal(f.substring(eq + 1))
-        i += 1
-      } else if (f.startsWith("s:")) {
-        // STRING zone map: `s:<col>=<lo>=<hi>`, each segment escaped
-        // (raw `=` cannot appear inside), binary UTF8 order. limit -1:
-        // plain split drops trailing empty segments, so an empty-string
-        // max (`s:col=lo=`) would parse as 2 fields and silently lose
-        // the marker (ADVICE r10)
-        f.substring(2).split("=", -1) match {
-          case Array(c, lo, hi) =>
-            strStats += unescapeVal(c) -> (unescapeVal(lo), unescapeVal(hi))
-          case _ => () // malformed field — skip
-        }
-        i += 1
-      } else if (i + 2 <= fs.length - 1) {
-        (fs(i + 1).toLongOption, fs(i + 2).toLongOption) match {
-          case (Some(lo), Some(hi)) => stats += f -> (lo, hi); i += 3
-          case _                    => i += 1 // malformed field — skip
-        }
-      } else i += 1
-    }
-    (fs(1), parts.result(), stats.result(), strStats.result())
-  }
-
   /** Per-file [min, max] of `statsCol` from the log's add lines (files
     * committed without stats are absent — callers must keep them). */
   def fileStats(dir: String, statsCol: String,
       asOf: Option[Int] = None): Map[String, (Long, Long)] =
-    state(dir, asOf).live.values.flatMap { l =>
-      val (f, _, stats, _) = parseAdd(l)
-      stats.get(statsCol).map(f -> _)
-    }.toMap
+    state(dir, asOf).live.values.flatMap(a =>
+      a.stats.get(statsCol).map(a.file -> _)).toMap
 
   /** ALL per-file zone maps at once: file → (col → [min, max]) from
     * the log's add lines — the connector's plan-time pruning input
     * ([[graft.sources.TxLogDataSource]] reads it once per scan). */
   def fileStatsAll(dir: String,
       asOf: Option[Int] = None): Map[String, Map[String, (Long, Long)]] =
-    state(dir, asOf).live.values.map { l =>
-      val (f, _, stats, _) = parseAdd(l)
-      f -> stats
-    }.toMap
+    state(dir, asOf).live.values.map(a => a.file -> a.stats).toMap
 
   /** ONE log fold serving every pruning consumer at once: the ordered
     * live-file list plus all three per-file metadata maps (long zone
@@ -644,11 +542,11 @@ object TxLog {
       : (Seq[String], Map[String, Map[String, (Long, Long)]],
          Map[String, Map[String, (String, String)]],
          Map[String, Map[String, String]]) = {
-    val parsed = state(dir, asOf).live.values.toSeq.map(parseAdd)
-    (parsed.map(_._1),
-      parsed.map(p => p._1 -> p._3).toMap,
-      parsed.map(p => p._1 -> p._4).toMap,
-      parsed.map(p => p._1 -> p._2).toMap)
+    val adds = state(dir, asOf).live.values.toSeq
+    (adds.map(_.file),
+      adds.map(a => a.file -> a.stats).toMap,
+      adds.map(a => a.file -> a.strStats).toMap,
+      adds.map(a => a.file -> a.partitionValues).toMap)
   }
 
   /** ALL per-file STRING zone maps (binary UTF8 [min, max]) — the
@@ -657,20 +555,14 @@ object TxLog {
     * on the add line. */
   def fileStatsStrAll(dir: String,
       asOf: Option[Int] = None): Map[String, Map[String, (String, String)]] =
-    state(dir, asOf).live.values.map { l =>
-      val (f, _, _, strStats) = parseAdd(l)
-      f -> strStats
-    }.toMap
+    state(dir, asOf).live.values.map(a => a.file -> a.strStats).toMap
 
   /** Per-file PARTITION VALUES from the log's add lines (Delta's
     * `partitionValues`): pure log metadata, no data IO. Files
     * committed without partition markers are absent. */
   def partitionValues(dir: String,
       asOf: Option[Int] = None): Map[String, Map[String, String]] =
-    state(dir, asOf).live.values.map { l =>
-      val (f, parts, _, _) = parseAdd(l)
-      f -> parts
-    }.toMap
+    state(dir, asOf).live.values.map(a => a.file -> a.partitionValues).toMap
 
   /** Live files whose `statsCol` range intersects [lo, hi] — plus any
     * file with no recorded stats (skipping must be conservative).
@@ -703,14 +595,13 @@ object TxLog {
     * tables that have one (or are new), so a stale narrower-than-union
     * line can never appear. */
   private def schemaLine(df: DataFrame, dir: String,
-      exact: Boolean = false): Seq[String] =
+      exact: Boolean = false): Seq[LogAction] =
     schemaLineOf(df.schema, dir, exact)
 
   private def schemaLineOf(schema: org.apache.spark.sql.types.StructType,
-      dir: String, exact: Boolean = false): Seq[String] = {
+      dir: String, exact: Boolean = false): Seq[LogAction] = {
     import org.apache.spark.sql.types.{DataType, StructType}
-    if (currentVersion(dir) < 0)
-      return Seq(s"schema\t${escapeVal(schema.json)}")
+    if (currentVersion(dir) < 0) return Seq(Schema(schema.json))
     state(dir, None).schemaJson match {
       case None => Seq.empty // legacy table — stay on the fallback path
       case Some(j) =>
@@ -723,10 +614,13 @@ object TxLog {
             // write-time guard (ADVICE r13): reads trust the recorded
             // types, so an append changing an existing column's TYPE
             // would commit files misread under them — refuse with the
-            // remedy instead of silently keeping the prior type
+            // remedy instead of silently keeping the prior type. Nested
+            // nullability is not a type change: file reads are nullable
+            // anyway, so a struct built from literals appends under a
+            // recorded struct built from columns
             val priorTypes = prior.fields.map(f => f.name -> f.dataType).toMap
-            val drift = schema.fields.filter(f =>
-              priorTypes.get(f.name).exists(_ != f.dataType))
+            val drift = schema.fields.filter(f => priorTypes.get(f.name)
+              .exists(!DataType.equalsIgnoreNullability(_, f.dataType)))
             require(drift.isEmpty,
               s"append to $dir changes existing column type(s): " +
                 drift.map(f =>
@@ -738,8 +632,7 @@ object TxLog {
             StructType(prior.fields ++
               schema.fields.filterNot(f => have(f.name)))
           }
-        if (next == prior) Seq.empty
-        else Seq(s"schema\t${escapeVal(next.json)}")
+        if (next == prior) Seq.empty else Seq(Schema(next.json))
     }
   }
 
@@ -752,8 +645,7 @@ object TxLog {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   def create(df: DataFrame, dir: String): Int =
-    claimVersion(dir, 0,
-      stage(df, dir).map(f => s"add\t$f") ++ schemaLine(df, dir))
+    claimVersion(dir, 0, stage(df, dir).map(Add(_)) ++ schemaLine(df, dir))
 
   /** IN-PLACE conversion of an existing plain-parquet directory into a
     * txlog table (Delta's `CONVERT TO DELTA`): version 0 REFERENCES
@@ -789,12 +681,10 @@ object TxLog {
     require(files.nonEmpty, s"$dir holds no parquet files to convert")
     val schema = spark.read.option("mergeSchema", "true")
       .parquet(files.map(f => s"$dir/$f"): _*).schema
-    val adds = enrichLines(spark, dir,
-      files.map(f => s"add\t$f"), statsCols)
+    val adds = enrichLines(spark, dir, files.map(Add(_)), statsCols)
     claimVersion(dir, 0, adds ++ schemaLineOf(schema, dir) ++
       (if (statsCols.isEmpty) Seq.empty
-       else Seq(s"property\t${escapeVal(StatsColsProp)}\t" +
-         escapeVal(statsCols.map(escapeVal).mkString(",")))))
+       else Seq(Property(StatsColsProp, encodeCols(statsCols)))))
   }
 
   /** Source files already ingested by [[copyInto]] — canonical paths. */
@@ -834,8 +724,7 @@ object TxLog {
         if (staged.isEmpty) 0L
         else spark.read.parquet(staged.map(f => s"$dir/$f"): _*).count()
       val v = claimVersion(dir, cur + 1,
-        lines ++ fresh.map(p => s"copysrc\t${escapeVal(p)}") ++
-          schemaLine(df, dir))
+        lines ++ fresh.map(CopySrc) ++ schemaLine(df, dir))
       (v, fresh.size, rows)
     } catch { case e: Throwable =>
       staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
@@ -853,9 +742,8 @@ object TxLog {
       schema: org.apache.spark.sql.types.StructType,
       properties: Map[String, String] = Map.empty): Int = {
     require(currentVersion(dir) < 0, s"$dir already has a version 0")
-    claimVersion(dir, 0, s"schema\t${escapeVal(schema.json)}" +:
-      properties.toSeq.map { case (k, v) =>
-        s"property\t${escapeVal(k)}\t${escapeVal(v)}" })
+    claimVersion(dir, 0, Schema(schema.json) +:
+      properties.toSeq.map { case (k, v) => Property(k, v) })
   }
 
   /** Current TBLPROPERTIES (log metadata). */
@@ -885,7 +773,7 @@ object TxLog {
       k != ColumnMappingProp && k != RetiredColsProp,
       s"$k is engine-managed (RENAME/DROP COLUMN maintain it) and " +
         "cannot be set or unset directly"))
-    var mapLines = Seq.empty[String]
+    var mapLines = Seq.empty[LogAction]
     newSchema.foreach { next =>
       tableSchema(dir).foreach { prior =>
         prior.fields.foreach { f =>
@@ -925,11 +813,8 @@ object TxLog {
         }
       }
     }
-    val lines = set.toSeq.map { case (k, v) =>
-        s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
-      unset.map(k => s"unproperty\t${escapeVal(k)}") ++
-      mapLines ++
-      newSchema.map(s => s"schema\t${escapeVal(s.json)}")
+    val lines = set.toSeq.map { case (k, v) => Property(k, v) } ++
+      unset.map(Unproperty) ++ mapLines ++ newSchema.map(s => Schema(s.json))
     if (lines.isEmpty) return cur
     claimVersion(dir, cur + 1, lines)
   }
@@ -957,8 +842,7 @@ object TxLog {
     val staged = stageEnforced(df, dir)
     // declared-stats markers are content properties of the staged
     // files — computed once, reused across claim-retry attempts
-    val lines = withDeclaredStats(df.sparkSession, dir,
-      staged.map(f => s"add\t$f"))
+    val lines = withDeclaredStats(df.sparkSession, dir, staged.map(Add(_)))
     claimAppendRetrying(df.sparkSession, dir, staged,
       () => lines ++ schemaLine(df, dir))
   }
@@ -977,9 +861,9 @@ object TxLog {
     else {
       val removes = snapshot(dir, Some(cur))
       claimVersion(dir, cur + 1,
-        removes.map(f => s"remove\t$f") ++
+        removes.map(Remove) ++
           withDeclaredStats(df.sparkSession, dir,
-            stageEnforced(df, dir).map(f => s"add\t$f")) ++
+            stageEnforced(df, dir).map(Add(_))) ++
           schemaLine(df, dir, exact = true))
     }
   }
@@ -1045,8 +929,7 @@ object TxLog {
         s"cannot add CHECK constraint '$name' ($constraintSql): " +
           "existing rows violate it")
     }
-    claimVersion(dir, cur + 1,
-      Seq(s"constraint\t${escapeVal(name)}\t${escapeVal(constraintSql)}"))
+    claimVersion(dir, cur + 1, Seq(Constraint(name, constraintSql)))
   }
 
   /** Drop an active constraint (a metadata-only commit). */
@@ -1054,7 +937,7 @@ object TxLog {
     val cur = currentVersion(dir)
     require(state(dir, None).cons.contains(name),
       s"no active constraint '$name'")
-    claimVersion(dir, cur + 1, Seq(s"unconstraint\t${escapeVal(name)}"))
+    claimVersion(dir, cur + 1, Seq(Unconstraint(name)))
   }
 
   /** Active CHECK constraints at `asOf` (default latest). */
@@ -1139,7 +1022,7 @@ object TxLog {
     else tableProperties(dir).get(PartitionColsProp).toSeq
       .flatMap(_.split(',')).filter(_.nonEmpty).map(unescapeVal)
 
-  private[graft] def encodePartitionCols(cols: Seq[String]): String =
+  private[graft] def encodeCols(cols: Seq[String]): String =
     cols.map(escapeVal).mkString(",")
 
   /** The reserved table property carrying DECLARATIVE data-skipping
@@ -1169,21 +1052,18 @@ object TxLog {
     * skipped (a narrow pre-evolution batch stays writable); statless
     * files remain the conservative always-kept shape. */
   private def withDeclaredStats(spark: SparkSession, dir: String,
-      lines: Seq[String]): Seq[String] =
-    enrichLines(spark, dir, lines, statsColumns(dir))
+      adds: Seq[Add]): Seq[Add] =
+    enrichLines(spark, dir, adds, statsColumns(dir))
 
   /** The explicit-columns form — for the CTAS/RTAS staging leg, where
     * the stats columns come from the NEW definition's properties (not
     * yet committed to the log this writer stages into). */
   private[graft] def enrichLines(spark: SparkSession, dir: String,
-      lines: Seq[String], cols: Seq[String]): Seq[String] = {
-    if (cols.isEmpty || lines.isEmpty) return lines
-    val files = lines.map(l => parseAdd(l)._1)
-    val markers = statMarkersFor(spark, dir, files, cols)
-    lines.map { l =>
-      val base = new File(parseAdd(l)._1).getName
-      (l +: markers.getOrElse(base, Seq.empty)).mkString("\t")
-    }
+      adds: Seq[Add], cols: Seq[String]): Seq[Add] = {
+    if (cols.isEmpty || adds.isEmpty) return adds
+    val markers = statMarkersFor(spark, dir, adds.map(_.file), cols)
+    adds.map(a => a.copy(fields = a.fields ++
+      markers.getOrElse(new File(a.file).getName, Seq.empty)))
   }
 
   /** Decode a comma-joined escaped column list (the encoding of
@@ -1234,22 +1114,20 @@ object TxLog {
     * to (a rename whose mapping landed in a different version than its
     * schema would have a torn window). */
   private def mappingLines(m: Map[String, String],
-      retired: Set[String]): Seq[String] = Seq(
-    if (m.isEmpty) s"unproperty\t${escapeVal(ColumnMappingProp)}"
-    else s"property\t${escapeVal(ColumnMappingProp)}\t" + escapeVal(
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${escapeVal(k)}=${escapeVal(v)}" }
-        .mkString(",")),
-    if (retired.isEmpty) s"unproperty\t${escapeVal(RetiredColsProp)}"
-    else s"property\t${escapeVal(RetiredColsProp)}\t" + escapeVal(
-      retired.toSeq.sorted.map(escapeVal).mkString(",")))
+      retired: Set[String]): Seq[LogAction] = Seq(
+    if (m.isEmpty) Unproperty(ColumnMappingProp)
+    else Property(ColumnMappingProp, m.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${escapeVal(k)}=${escapeVal(v)}" }
+      .mkString(",")),
+    if (retired.isEmpty) Unproperty(RetiredColsProp)
+    else Property(RetiredColsProp, encodeCols(retired.toSeq.sorted)))
 
   /** The `feature` declaration line for `name`, or nothing when the
     * table already declares it (features are monotone — once declared,
     * every reader must implement it forever). */
-  private def featureLine(dir: String, name: String): Seq[String] =
+  private def featureLine(dir: String, name: String): Seq[LogAction] =
     if (state(dir, None).features.contains(name)) Seq.empty
-    else Seq(s"feature\t${escapeVal(name)}")
+    else Seq(Feature(name))
 
   /** REQUIRED reader features declared by the table. */
   def tableFeatures(dir: String): Set[String] =
@@ -1305,7 +1183,7 @@ object TxLog {
       if (f.name == from) f.copy(name = to) else f))
     claimVersion(dir, cur + 1,
       featureLine(dir, "column-mapping") ++ mappingLines(m2, cm.retired) :+
-        s"schema\t${escapeVal(next.json)}")
+        Schema(next.json))
   }
 
   /** `ALTER TABLE ... DROP COLUMN c` — ONE metadata commit: the schema
@@ -1331,7 +1209,7 @@ object TxLog {
     claimVersion(dir, cur + 1,
       featureLine(dir, "column-mapping") ++
         mappingLines(cm.toPhys - name, cm.retired + cm.phys(name)) :+
-        s"schema\t${escapeVal(next.json)}")
+        Schema(next.json))
   }
 
   /** LOGICAL → PHYSICAL rename of an outgoing frame — the single seam
@@ -1408,7 +1286,7 @@ object TxLog {
     val adds = withDeclaredStats(spark, dir, adds0)
     if (cur < 0) claimVersion(dir, 0, adds ++ schemaLine(df, dir))
     else claimVersion(dir, cur + 1,
-      snapshot(dir, Some(cur)).map(f => s"remove\t$f") ++ adds ++
+      snapshot(dir, Some(cur)).map(Remove) ++ adds ++
         schemaLine(df, dir, exact = true))
   }
 
@@ -1443,16 +1321,16 @@ object TxLog {
       val affected = affectedFiles(spark, dir, candidates,
         df => df.filter(pred))
       val keepLines =
-        if (affected.isEmpty) Seq.empty[String]
+        if (affected.isEmpty) Seq.empty[Add]
         else {
           val keep = readFiles(spark, dir, affected,
               dvFrameFrom(spark, dir, st.dv.toMap))
             .filter(!pred || pred.isNull)
-          if (keep.isEmpty) Seq.empty[String]
+          if (keep.isEmpty) Seq.empty[Add]
           else stageLinesEnforced(spark, keep, dir)._2
         }
       claimVersion(dir, cur + 1,
-        (proven ++ affected).map(f => s"remove\t$f") ++
+        (proven ++ affected).map(Remove) ++
           keepLines ++ dataLines ++ schemaLine(data, dir))
     } catch { case e: Throwable =>
       // a refused batch (or lost claim race) leaves no orphans behind
@@ -1492,10 +1370,10 @@ object TxLog {
       def tuple(m: Map[String, String]): Seq[String] =
         partCols.map(c => m.getOrElse(c, ""))
       val incoming: Set[Seq[String]] =
-        lines.map(l => tuple(parseAdd(l)._2)).toSet
+        lines.map(a => tuple(a.partitionValues)).toSet
       val victims = live.filter(f => incoming.contains(tuple(pv(f))))
       claimVersion(dir, cur + 1,
-        victims.map(f => s"remove\t$f") ++ lines ++
+        victims.map(Remove) ++ lines ++
           schemaLine(data, dir))
     } catch { case e: Throwable =>
       staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
@@ -1511,14 +1389,14 @@ object TxLog {
     * [[commitDefinition]]. */
   private[graft] def stageForDefinition(spark: SparkSession, df: DataFrame,
       dir: String, partCols: Seq[String],
-      statsCols: Seq[String] = Seq.empty): (Seq[String], Seq[String]) = {
+      statsCols: Seq[String] = Seq.empty): (Seq[String], Seq[Add]) = {
     // the OLD table's column mapping must NOT apply: this data is the
     // NEW definition's, and commitDefinition clears the mapping in the
     // same commit that references these files
     val (names, lines) =
       if (partCols.isEmpty) {
         val n = stage(df, dir, useMapping = false)
-        (n, n.map(f => s"add\t$f"))
+        (n, n.map(Add(_)))
       } else stagePartitioned(spark, df, dir, partCols,
         checkConstraints = false, useMapping = false)
     (names, enrichLines(spark, dir, lines, statsCols))
@@ -1534,25 +1412,22 @@ object TxLog {
     * time-travelable until vacuumed, unlike a drop+recreate.
     * `expectedVersion` pins optimistic concurrency: -1 creates at
     * version 0; otherwise a commit racing in between conflicts. */
-  private[graft] def commitDefinition(dir: String, addLines: Seq[String],
+  private[graft] def commitDefinition(dir: String, addLines: Seq[Add],
       schema: org.apache.spark.sql.types.StructType,
       props: Map[String, String], expectedVersion: Int): Int = {
-    val propLines = props.toSeq.map { case (k, v) =>
-      s"property\t${escapeVal(k)}\t${escapeVal(v)}" }
-    val schemaL = s"schema\t${escapeVal(schema.json)}"
+    val propLines = props.toSeq.map { case (k, v) => Property(k, v) }
+    val schemaL = Schema(schema.json)
     if (expectedVersion < 0)
       claimVersion(dir, 0, addLines ++ propLines :+ schemaL)
     else {
       val st = state(dir, Some(expectedVersion))
-      val removes = st.live.keys.toSeq.map(f => s"remove\t$f")
+      val removes = st.live.keys.toSeq.map(Remove)
       val unprops = st.props.keys.filterNot(props.contains)
-        .map(k => s"unproperty\t${escapeVal(k)}").toSeq
-      val uncons = st.cons.keys
-        .map(n => s"unconstraint\t${escapeVal(n)}").toSeq
+        .map(Unproperty).toSeq
+      val uncons = st.cons.keys.map(Unconstraint).toSeq
       // the COPY INTO ledger clears with the old definition: a replaced
       // table owes nothing to what the PREVIOUS content ingested
-      val uncopies = st.copied.toSeq
-        .map(s => s"uncopysrc\t${escapeVal(s)}")
+      val uncopies = st.copied.toSeq.map(UncopySrc)
       claimVersion(dir, expectedVersion + 1,
         removes ++ uncons ++ unprops ++ uncopies ++
           addLines ++ propLines :+ schemaL)
@@ -1567,7 +1442,7 @@ object TxLog {
       checkConstraints: Boolean = true,
       arrange: (DataFrame, Seq[String]) => DataFrame = (d, _) => d,
       useMapping: Boolean = true)
-      : (Seq[String], Seq[String]) = {
+      : (Seq[String], Seq[Add]) = {
     import org.apache.spark.sql.functions.col
     require(partCols.nonEmpty, "partCols must be non-empty")
     new File(dir).mkdirs()
@@ -1587,13 +1462,15 @@ object TxLog {
     arrange(dup, shadows)
       .write.partitionBy(shadows: _*).mode("overwrite").parquet(tmp.toString)
     // walk the partition directory tree: each leaf parquet file sits
-    // under one __p_c=<escaped value> path per partition column
+    // under one __p_c=<escaped value> path per partition column (Spark's
+    // Hive-compatible `%xx` path escaping, which the log's own
+    // unescaping decodes)
     def leaves(d: File, vals: Map[String, String])
         : Seq[(File, Map[String, String])] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
         case f if f.isDirectory && f.getName.contains("=") =>
           val Array(k, v) = f.getName.split("=", 2)
-          leaves(f, vals + (k.stripPrefix("__p_") -> sparkUnescape(v)))
+          leaves(f, vals + (k.stripPrefix("__p_") -> unescapeVal(v)))
         case f if f.isFile && f.getName.endsWith(".parquet")
             && !f.getName.startsWith(".") => Seq(f -> vals)
         case _ => Seq.empty
@@ -1609,16 +1486,10 @@ object TxLog {
     // [[stageEnforced]] (the partitionBy writer is its own staging path)
     if (checkConstraints) validateStaged(spark, dir, named.map(_._1))
     val adds = named.map { case (name, vals) =>
-      val markers = partCols.map(c =>
-        s"p:${escapeVal(c)}=${escapeVal(vals.getOrElse(c, ""))}")
-      (s"add\t$name" +: markers).mkString("\t")
+      Add(name, partCols.map(c => Part(c, vals.getOrElse(c, ""))))
     }
     (named.map(_._1), adds)
   }
-
-  /** Undo Spark's partition-path escaping (`%xx`, uppercase hex — the
-    * Hive-compatible `escapePathName` scheme). */
-  private def sparkUnescape(s: String): String = unescapeVal(s)
 
   /** Live files whose partition values match every (col → value) pair
     * in `filter` — plus any file with no recorded value for a filtered
@@ -1679,12 +1550,12 @@ object TxLog {
       df => df.filter(pred))
     if (affected.isEmpty && proven.isEmpty) return cur
     val adds =
-      if (affected.isEmpty) Seq.empty[String]
+      if (affected.isEmpty) Seq.empty[Add]
       else {
         val keep = readFiles(spark, dir, affected,
             dvFrameFrom(spark, dir, st.dv.toMap))
           .filter(!pred || pred.isNull)
-        if (keep.isEmpty) Seq.empty[String]
+        if (keep.isEmpty) Seq.empty[Add]
         else stageLinesEnforced(spark, keep, dir)._2
       }
     commitLines(dir, cur, adds, proven ++ affected)
@@ -1837,7 +1708,7 @@ object TxLog {
   /** Accumulated DELETION VECTORS at `asOf`: file → deleted row
     * positions, with sidecar files resolved through `spark`. Driver
     * materialization by design — a POSITIONS-level view for tests and
-    * small tables; the read path joins [[dvFrame]] distributed and
+    * small tables; the read path joins [[dvFrameFrom]] distributed and
     * never calls this. `private[graft]` makes the contract structural
     * (VERDICT r9 #3): production code outside the library cannot reach
     * the unbounded positions collect — TxLogSpec is its only caller. */
@@ -1863,16 +1734,6 @@ object TxLog {
     }.filter(_._2.nonEmpty)
   }
 
-  /** The DISTRIBUTED deletion-vector relation at `asOf`: a
-    * (`__f` file basename, `__p` position) DataFrame unioning inline
-    * log positions (metadata-sized parallelize) with sidecar parquet
-    * scans — row positions never pass through the driver (VERDICT r8:
-    * a 100 TB GDPR delete has millions of matches). None when no
-    * vectors are outstanding. */
-  private def dvFrame(spark: SparkSession, dir: String,
-      asOf: Option[Int]): Option[DataFrame] =
-    dvFrameFrom(spark, dir, dvSources(dir, asOf))
-
   /** DV sidecars are ENGINE-written ([[commitDvHits]]): (file STRING,
     * pos BIGINT), always. Declaring the schema on every sidecar read
     * skips the per-read schema-inference Spark job a bare
@@ -1884,6 +1745,12 @@ object TxLog {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType)))
 
+  /** The DISTRIBUTED deletion-vector relation of `src` (a fold's
+    * outstanding vectors): a (`__f` file basename, `__p` position)
+    * DataFrame unioning inline log positions (metadata-sized
+    * parallelize) with sidecar parquet scans — row positions never pass
+    * through the driver (VERDICT r8: a 100 TB GDPR delete has millions
+    * of matches). None when no vectors are outstanding. */
   private def dvFrameFrom(spark: SparkSession, dir: String,
       src: Map[String, (Set[Long], Seq[String])]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
@@ -1932,8 +1799,7 @@ object TxLog {
     val (proven, candidates) = classifyByPredicate(st, pred)
     if (candidates.isEmpty) {
       if (proven.isEmpty) return cur
-      return claimOverAppendsRetrying(dir, cur,
-        proven.map(f => s"remove\t$f"))
+      return claimOverAppendsRetrying(dir, cur, proven.map(Remove))
     }
     // bind the row identity BEFORE the logical projection (mapped
     // tables): `_metadata` is only reachable on the scan's own output
@@ -1974,7 +1840,7 @@ object TxLog {
       // file-grain metadata collect (the affected-file LIST, never rows)
       val touchedNames = freshP.select("file").distinct().collect()
         .map(_.getString(0)).toSet
-      val removes = wholesaleRemoves.map(f => s"remove\t$f")
+      val removes = wholesaleRemoves.map(Remove)
       if (touchedNames.isEmpty) {
         if (wholesaleRemoves.isEmpty) return cur
         return claimOverAppendsRetrying(dir, cur, removes)
@@ -1987,9 +1853,7 @@ object TxLog {
       val sidecar = s"_dv/v$v-${java.util.UUID.randomUUID().toString.take(8)}"
       freshP.repartition(col("file")).sortWithinPartitions("file", "pos")
         .write.mode("overwrite").parquet(s"$dir/$sidecar")
-      val lines = touchedNames.toSeq.sorted.map { n =>
-        s"dvf\t${byName(n).head}\t$sidecar"
-      }
+      val lines = touchedNames.toSeq.sorted.map(n => Dvf(byName(n).head, sidecar))
       claimOverAppendsRetrying(dir, cur, removes ++ lines)
     } finally { freshP.unpersist(): Unit }
   }
@@ -2022,9 +1886,8 @@ object TxLog {
       case None => (Seq.empty, all)
       case Some(e) =>
         val n = MetaSurvive.normalize(e)
-        val metas = st.live.toSeq.map { case (f, l) =>
-          val (_, pv, zm, sm) = parseAdd(l)
-          f -> MetaSurvive.FileMeta(pv, zm, sm)
+        val metas = st.live.toSeq.map { case (f, a) =>
+          f -> MetaSurvive.FileMeta(a.partitionValues, a.stats, a.strStats)
         }
         val surviving = metas.filter { case (_, m) =>
           MetaSurvive.survives(m, n) }
@@ -2251,7 +2114,7 @@ object TxLog {
     * included on a declared-partitioned table) — the SQL MERGE
     * executor's staging leg ([[graft.plans.TxLogDml]]). */
   private[graft] def stageCheckedLines(spark: SparkSession,
-      df: DataFrame, dir: String): Seq[String] =
+      df: DataFrame, dir: String): Seq[Add] =
     stageLinesEnforced(spark, df, dir)._2
 
   /** Stage `df` under the table's DECLARED layout — partition-pure
@@ -2265,13 +2128,13 @@ object TxLog {
     * that CHANGES a partition column's value (UPDATE SET part = ...)
     * lands rows in their new partition files for free. */
   private[graft] def stageLinesEnforced(spark: SparkSession,
-      df: DataFrame, dir: String): (Seq[String], Seq[String]) = {
+      df: DataFrame, dir: String): (Seq[String], Seq[Add]) = {
     val declared = partitionColumns(dir)
     val (names, lines) =
       if (declared.nonEmpty) stagePartitioned(spark, df, dir, declared)
       else {
         val n = stageEnforced(df, dir)
-        (n, n.map(f => s"add\t$f"))
+        (n, n.map(Add(_)))
       }
     (names, withDeclaredStats(spark, dir, lines))
   }
@@ -2280,9 +2143,8 @@ object TxLog {
     * rewriting writers' claim leg. Retries across pure blind appends
     * ([[claimOverAppendsRetrying]]). */
   private[graft] def commitLines(dir: String, expected: Int,
-      addLines: Seq[String], removes: Seq[String]): Int =
-    claimOverAppendsRetrying(dir, expected,
-      removes.map(f => s"remove\t$f") ++ addLines)
+      addLines: Seq[Add], removes: Seq[String]): Int =
+    claimOverAppendsRetrying(dir, expected, removes.map(Remove) ++ addLines)
 
   /** Is version `v` a PURE BLIND APPEND — new data files and their
     * bookkeeping only (add/txn/copysrc lines, a widened union schema),
@@ -2290,10 +2152,11 @@ object TxLog {
     * changes, and DECIDED? Only such versions commute with a
     * read-based DML commit. */
   private def isPureAppend(dir: String, v: Int): Boolean =
-    !versionUndecided(dir, v) && entryLines(dir, v).forall(l =>
-      l.startsWith("add\t") || l.startsWith("txn\t") ||
-        l.startsWith("copysrc\t") || l.startsWith("schema\t") ||
-        l.startsWith("ts\t")) // every commit's instant stamp
+    !versionUndecided(dir, v) && entryActions(dir, v).forall {
+      // Ts: every commit's instant stamp
+      case _: Add | _: Txn | _: CopySrc | _: Schema | _: Ts => true
+      case _ => false
+    }
 
   /** WRITE-SERIALIZABLE conflict resolution (Delta's default level):
     * a commit whose removes/rewrites were computed against snapshot
@@ -2310,7 +2173,7 @@ object TxLog {
     * maintenance coexisting vs the nightly DELETE killing every
     * concurrent append stream (or vice versa). */
   private def claimOverAppendsRetrying(dir: String, expected: Int,
-      lines: Seq[String], maxRetries: Int = 20): Int = {
+      lines: Seq[LogAction], maxRetries: Int = 20): Int = {
     var base = expected
     var attempt = 0
     while (true) {
@@ -2410,16 +2273,16 @@ object TxLog {
       val affected = affectedFiles(spark, dir, st.live.keys.toSeq,
         df => df.join(keys, Seq(keyCol), "left_semi"))
       val survivorLines =
-        if (affected.isEmpty) Seq.empty[String]
+        if (affected.isEmpty) Seq.empty[Add]
         else {
           val kept = readFiles(spark, dir, affected,
               dvFrameFrom(spark, dir, st.dv.toMap))
             .join(keys, Seq(keyCol), "left_anti")
-          if (kept.isEmpty) Seq.empty[String]
+          if (kept.isEmpty) Seq.empty[Add]
           else stageLinesEnforced(spark, kept, dir)._2
         }
       claimVersion(dir, cur + 1,
-        affected.map(f => s"remove\t$f") ++
+        affected.map(Remove) ++
           survivorLines ++ srcLines ++
           schemaLine(source, dir))
     } finally { keys.unpersist(): Unit }
@@ -2465,7 +2328,7 @@ object TxLog {
     validateStaged(spark, dir, files)
     // declared-stats bounds per epoch batch (one distributed agg over
     // the epoch's files) — streamed files prune exactly like batch ones
-    val lines = withDeclaredStats(spark, dir, files.map(f => s"add\t$f"))
+    val lines = withDeclaredStats(spark, dir, files.map(Add(_)))
     claimTxnRetrying(spark, dir, files, app, txnId,
       () => lines ++ schemaLineOf(schema, dir))
   }
@@ -2487,10 +2350,7 @@ object TxLog {
     validateStaged(spark, dir, files.map(_._1))
     val lines = withDeclaredStats(spark, dir,
       files.map { case (f, vals) =>
-        val markers = vals.toSeq.map { case (c, v) =>
-          s"p:${escapeVal(c)}=${escapeVal(v)}" }
-        (s"add\t$f" +: markers).mkString("\t")
-      })
+        Add(f, vals.toSeq.map { case (c, v) => Part(c, v) }) })
     claimTxnRetrying(spark, dir, files.map(_._1), app, txnId,
       () => lines ++ schemaLineOf(schema, dir))
   }
@@ -2500,7 +2360,7 @@ object TxLog {
     * detection survives log truncation below a checkpoint. */
   def txnSeen(dir: String, app: String, txnId: Long): Boolean =
     currentVersion(dir) >= 0 &&
-      state(dir, None).txns.contains(s"txn\t$app\t$txnId")
+      state(dir, None).txns.contains(Txn(app, txnId))
 
   /** OPTIMIZE: rewrite the current live set into `nFiles` compacted
     * files as a new version — bit-identical rows, new layout; older
@@ -2513,7 +2373,7 @@ object TxLog {
     * [[graft.functions.ZOrder2D]], range-partitioned into `nFiles` by
     * curve position and sorted within — so every output file covers a
     * small curve segment ≈ a small RECTANGLE in (x, y) space. The add
-    * lines then carry min/max triples for BOTH columns ([[statAddLines]]
+    * lines then carry min/max triples for BOTH columns ([[enrichLines]]
     * one-scan bounds), making [[pruneSnapshot]] zone maps effective on
     * either dimension at once instead of only a leading sort key. */
   def optimize(spark: SparkSession, dir: String, nFiles: Int = 1,
@@ -2573,21 +2433,19 @@ object TxLog {
       }
       // constraint re-check skipped: bit-identical rows (nodc), same
       // contract as the unpartitioned compaction path
-      val (staged, lines) = stagePartitioned(spark, srcZ, dir, declared,
+      val (_, adds) = stagePartitioned(spark, srcZ, dir, declared,
         checkConstraints = false, arrange = arrange)
-      val statM = statMarkersFor(spark, dir, staged,
-        (clusterBy ++ statsColumns(dir)).distinct)
-      val full = staged.zip(lines).map { case (n, l) =>
-        (l +: statM.getOrElse(n, Seq.empty)).mkString("\t") }
-      return claimVersion(dir, cur + 1,
-        live.map(f => s"remove\t$f") ++ full :+ "nodc")
+      return claimVersion(dir, cur + 1, live.map(Remove) ++
+        enrichLines(spark, dir, adds,
+          (clusterBy ++ statsColumns(dir)).distinct) :+ NoDataChange)
     }
     zOpt match {
       case None =>
         claimVersion(dir, cur + 1,
-          live.map(f => s"remove\t$f") ++
-            statAddLines(spark, dir, stage(src.coalesce(nFiles), dir),
-              statsColumns(dir)) :+ "nodc")
+          live.map(Remove) ++
+            enrichLines(spark, dir,
+              stage(src.coalesce(nFiles), dir).map(Add(_)),
+              statsColumns(dir)) :+ NoDataChange)
       case Some(z) =>
         // curve-ordered layout; the helper column never reaches the files
         val clustered = src.withColumn("__z", z)
@@ -2596,9 +2454,9 @@ object TxLog {
           .drop("__z")
         val staged = stage(clustered, dir)
         claimVersion(dir, cur + 1,
-          live.map(f => s"remove\t$f") ++
-            statAddLines(spark, dir, staged,
-              (clusterBy ++ statsColumns(dir)).distinct) :+ "nodc")
+          live.map(Remove) ++
+            enrichLines(spark, dir, staged.map(Add(_)),
+              (clusterBy ++ statsColumns(dir)).distinct) :+ NoDataChange)
     }
   }
 
@@ -2645,18 +2503,9 @@ object TxLog {
     require(missingSc.isEmpty,
       s"cannot restore to version $toVersion: DV sidecars already " +
         s"vacuumed: ${missingSc.take(3).mkString(", ")}")
-    // remove EVERYTHING live now, re-add the target verbatim: removes
-    // apply before adds within a commit, so files live at both
-    // versions come back with the TARGET's add line and vectors
-    val dvLines = st.dv.toSeq.flatMap { case (f, (inline, sidecars)) =>
-      (if (inline.nonEmpty)
-        Seq(s"dv\t$f\t${inline.toSeq.sorted.mkString(",")}")
-      else Seq.empty) ++ sidecars.map(sc => s"dvf\t$f\t$sc")
-    }
     val curSt = state(dir, Some(cur))
     val schemaSnap = st.schemaJson.toSeq
-      .filter(j => !curSt.schemaJson.contains(j))
-      .map(j => s"schema\t${escapeVal(j)}")
+      .filter(j => !curSt.schemaJson.contains(j)).map(Schema)
     // LAYOUT-critical reserved properties travel with the data they
     // describe: a restore across a RENAME/DROP COLUMN (or a REPLACE
     // that changed partitioning/stats declarations) must snap them
@@ -2666,15 +2515,17 @@ object TxLog {
     val layoutSnap = Seq(PartitionColsProp, StatsColsProp,
         ColumnMappingProp, RetiredColsProp).flatMap { k =>
       (st.props.get(k), curSt.props.get(k)) match {
-        case (Some(v), c) if !c.contains(v) =>
-          Seq(s"property\t${escapeVal(k)}\t${escapeVal(v)}")
-        case (None, Some(_)) => Seq(s"unproperty\t${escapeVal(k)}")
+        case (Some(v), c) if !c.contains(v) => Seq(Property(k, v))
+        case (None, Some(_)) => Seq(Unproperty(k))
         case _ => Seq.empty
       }
     }
+    // remove EVERYTHING live now, re-add the target verbatim: removes
+    // apply before adds within a commit, so files live at both
+    // versions come back with the TARGET's add line and vectors
     claimVersion(dir, cur + 1,
-      snapshot(dir, Some(cur)).map(f => s"remove\t$f") ++
-        st.live.values.toSeq ++ dvLines ++ layoutSnap ++ schemaSnap)
+      curSt.live.keys.toSeq.map(Remove) ++ st.fileActions() ++
+        layoutSnap ++ schemaSnap)
   }
 
   def shallowClone(srcDir: String, dstDir: String): Int = {
@@ -2687,41 +2538,20 @@ object TxLog {
     require(!srcSt.pendingXref,
       s"cannot clone $srcDir: a multi-table transaction in range has " +
         "not been decided yet (publish or TxLog.abortTx it first)")
-    val srcLive = srcSt.live.keys.toSeq
-    val srcDvs = srcSt.dv.toMap
     val rel = Paths.get(dstDir).toAbsolutePath
       .relativize(Paths.get(srcDir).toAbsolutePath)
     new File(dstDir).mkdirs()
-    def tr(f: String) = s"$rel${File.separator}$f"
-    // outstanding source DVs carry over, keys AND sidecar paths
-    // translated — a clone of a merge-on-read table must not resurrect
-    // deleted rows (pure log rewrite, no data IO). The source's
-    // METADATA clones too: recorded schema (a clone of an EMPTY or
-    // schema-evolved table must stay self-describing), CHECK
-    // constraints, and TBLPROPERTIES — Delta's clone semantics.
-    // marker fields (p: partition values, zone triples, s: string
-    // bounds) carry VERBATIM — the clone must prune exactly like the
-    // source, and a clone whose files lost their markers would refuse
-    // dynamic partition overwrite and scan everything forever
-    val lines = srcSt.live.toSeq.sortBy(_._1).map { case (f, l) =>
-      (Seq("add", tr(f)) ++ l.split('\t').drop(2)).mkString("\t") } ++
-      srcDvs.toSeq.filter { case (f, _) => srcLive.contains(f) }
-        .sortBy(_._1).flatMap { case (f, (inline, sidecars)) =>
-          (if (inline.nonEmpty)
-            Seq(s"dv\t${tr(f)}\t${inline.toSeq.sorted.mkString(",")}")
-          else Seq.empty) ++
-            sidecars.map(sc => s"dvf\t${tr(f)}\t${tr(sc)}")
-        } ++
-      srcSt.cons.toSeq.map { case (n, sql) =>
-        s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
-      srcSt.props.toSeq.map { case (k, v) =>
-        s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
-      // the COPY INTO ledger clones too: re-running the same COPY INTO
-      // against the clone must not double-load what the source ingested
-      srcSt.copied.toSeq.map(s => s"copysrc\t${escapeVal(s)}") ++
-      srcSt.features.toSeq.map(f => s"feature\t${escapeVal(f)}") ++
-      srcSt.schemaJson.map(j => s"schema\t${escapeVal(j)}")
-    try claimVersion(dstDir, 0, lines)
+    // the source's serialized state with every file and sidecar
+    // reference re-rooted at the source (pure log rewrite, no data IO):
+    // outstanding DVs carry over — a clone of a merge-on-read table
+    // must not resurrect deleted rows; add markers (partition values,
+    // zone maps) carry verbatim — the clone must prune exactly like the
+    // source; and the METADATA clones too (schema, CHECK constraints,
+    // TBLPROPERTIES, reader features, and the COPY INTO ledger, so
+    // re-running the same COPY INTO against the clone does not
+    // double-load) — Delta's clone semantics
+    try claimVersion(dstDir, 0, srcSt.serialize(
+      path = f => s"$rel${File.separator}$f", forClone = true))
     catch {
       case _: java.util.ConcurrentModificationException =>
         throw new java.util.ConcurrentModificationException(
@@ -2784,24 +2614,8 @@ object TxLog {
       } finally walk.close()
       sc -> to
     }.toMap
-    val lines = live.map { case (f, l) =>
-      (Seq("add", base(f)) ++ l.split('\t').drop(2)).mkString("\t") } ++
-      srcSt.dv.toSeq.filter { case (f, _) => srcSt.live.contains(f) }
-        .sortBy(_._1).flatMap { case (f, (inline, scs)) =>
-          (if (inline.nonEmpty)
-            Seq(s"dv\t${base(f)}\t${inline.toSeq.sorted.mkString(",")}")
-          else Seq.empty) ++ scs.map(sc => s"dvf\t${base(f)}\t${scMap(sc)}")
-        } ++
-      srcSt.cons.toSeq.map { case (n, sql) =>
-        s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
-      srcSt.props.toSeq.map { case (k, v) =>
-        s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
-      // the COPY INTO ledger clones too: re-running the same COPY INTO
-      // against the clone must not double-load what the source ingested
-      srcSt.copied.toSeq.map(s => s"copysrc\t${escapeVal(s)}") ++
-      srcSt.features.toSeq.map(f => s"feature\t${escapeVal(f)}") ++
-      srcSt.schemaJson.map(j => s"schema\t${escapeVal(j)}")
-    try claimVersion(dstDir, 0, lines)
+    try claimVersion(dstDir, 0, srcSt.serialize(
+      path = p => scMap.getOrElse(p, base(p)), forClone = true))
     catch {
       case _: java.util.ConcurrentModificationException =>
         throw new java.util.ConcurrentModificationException(
@@ -2819,7 +2633,7 @@ object TxLog {
     require(cur >= 0, s"$dir is not a TxLog table")
     val live = snapshot(dir, Some(cur))
     if (live.isEmpty) return cur
-    claimVersion(dir, cur + 1, live.map(f => s"remove\t$f"))
+    claimVersion(dir, cur + 1, live.map(Remove))
   }
 
   /** Drop data files no longer live at the CURRENT version and not
@@ -2886,9 +2700,8 @@ object TxLog {
     * hard-link claim is the publish, so the mtime IS the commit
     * instant as long as metadata survives). */
   private def entryInstant(p: Path): Long =
-    fileLines(p).collectFirst {
-      case l if l.startsWith("ts\t") => l.substring(3).toLong
-    }.getOrElse(p.toFile.lastModified())
+    LogAction.read(p).collectFirst { case Ts(ms) => ms }
+      .getOrElse(p.toFile.lastModified())
 
   /** Rewrite version `v`'s recorded commit instant (the `ts` line) —
     * the admin/test hook for pinning deterministic instants (backdated
@@ -2897,10 +2710,9 @@ object TxLog {
   private[graft] def setCommitInstant(dir: String, v: Int,
       tsMillis: Long): Unit = {
     val p = versionFile(dir, v)
-    val rest = fileLines(p).filterNot(_.startsWith("ts\t"))
+    val rest = LogAction.read(p).filterNot(_.isInstanceOf[Ts])
     val tmp = Files.createTempFile(logDir(dir).toPath, s".rets-$v-", ".tmp")
-    Files.write(tmp, (s"ts\t$tsMillis" +: rest)
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(tmp, LogAction.render(Ts(tsMillis) +: rest))
     Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
     Files.setLastModifiedTime(p,
@@ -2947,13 +2759,11 @@ object TxLog {
     (cur to 0 by -1).flatMap { v =>
       val p = versionFile(dir, v)
       if (Files.exists(p)) {
-        val lines = entryLines(dir, v)
-        Some((v, fileLines(p).collectFirst {
-          case l if l.startsWith("ts\t") => l.substring(3).toLong
-        }.getOrElse(p.toFile.lastModified()),
-          lines.count(_.startsWith("add\t")),
-          lines.count(_.startsWith("remove\t")),
-          lines.count(l => l.startsWith("dv\t") || l.startsWith("dvf\t"))))
+        val acts = entryActions(dir, v)
+        Some((v, entryInstant(p),
+          acts.count(_.isInstanceOf[Add]),
+          acts.count(_.isInstanceOf[Remove]),
+          acts.count(a => a.isInstanceOf[Dv] || a.isInstanceOf[Dvf])))
       } else {
         val cp = checkpointFile(dir, v)
         if (Files.exists(cp)) Some((v, cp.toFile.lastModified(), -1, -1, -1))
@@ -3018,37 +2828,22 @@ object TxLog {
           s"change feed needs raw log entries, but version $v of $dir " +
             "was truncated below a checkpoint — narrow the range to " +
             "retained versions")
-      val lines = entryLines(dir, v)
+      val acts = entryActions(dir, v)
+      val removes = acts.collect { case Remove(f) => f }
       // snapshot the v-1 vectors BEFORE advancing the fold (copied only
       // when this version removes files — the one consumer)
       val priorDv: Map[String, (Set[Long], Seq[String])] =
-        if (v > 0 && lines.exists(_.startsWith("remove\t"))) fold.dv.toMap
-        else Map.empty
-      fold.apply(lines)
-      if (lines.contains("nodc")) Seq.empty
+        if (v > 0 && removes.nonEmpty) fold.dv.toMap else Map.empty
+      fold.apply(acts)
+      if (acts.contains(NoDataChange)) Seq.empty
       else {
-        val adds = lines.collect {
-          case l if l.startsWith("add\t") => l.split('\t')(1) }
-        val removes = lines.collect {
-          case l if l.startsWith("remove\t") => l.split('\t')(1) }
-        // vectors THIS version commits, keyed by target file
+        val adds = acts.collect { case a: Add => a.file }
+        // vectors THIS version commits, keyed by target file: the same
+        // fold over this version's dv/dvf actions alone
         val newDv = {
-          val m = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Set[Long], Seq[String])]
-          lines.foreach { l =>
-            if (l.startsWith("dv\t")) l.split('\t') match {
-              case Array(_, f, ps) =>
-                val (i0, s0) = m.getOrElse(f, (Set.empty[Long], Seq.empty[String]))
-                m(f) = (i0 ++ ps.split(',').filter(_.nonEmpty).map(_.toLong), s0)
-              case _ => ()
-            } else if (l.startsWith("dvf\t")) l.split('\t') match {
-              case Array(_, f, path) =>
-                val (i0, s0) = m.getOrElse(f, (Set.empty[Long], Seq.empty[String]))
-                m(f) = (i0, s0 :+ path)
-              case _ => ()
-            }
-          }
-          m.toMap
+          val delta = new LogState
+          delta.apply(acts.filter(a => a.isInstanceOf[Dv] || a.isInstanceOf[Dvf]))
+          delta.dv.toMap
         }
         val addSet = adds.toSet
         val inserts =
@@ -3119,12 +2914,12 @@ object TxLog {
   // transaction's rows by reading inside the claim window.
   // ---------------------------------------------------------------------
 
-  /** Commit `parts` — (table dir, that table's log lines) — across ≥1
+  /** Commit `parts` — (table dir, that table's actions) — across ≥1
     * tables as ONE atomic transaction. `txRoot` hosts the shared tx
     * file; it must be reachable from every table dir (same filesystem,
     * like staging). Returns the committed version per table. */
   def commitAllLines(txRoot: String,
-      parts: Seq[(String, Seq[String])]): Seq[Int] =
+      parts: Seq[(String, Seq[LogAction])]): Seq[Int] =
     commitAllImpl(txRoot, parts.map { case (d, l) => (d, l, None) })
 
   /** As [[commitAllLines]], with a pinned EXPECTED current version per
@@ -3132,7 +2927,7 @@ object TxLog {
     * [[replaceAll]] computes removes from a snapshot and must conflict
     * — not silently half-apply — if another commit lands first). */
   private def commitAllImpl(txRoot: String,
-      parts: Seq[(String, Seq[String], Option[Int])]): Seq[Int] = {
+      parts: Seq[(String, Seq[LogAction], Option[Int])]): Seq[Int] = {
     require(parts.nonEmpty, "empty multi-table transaction")
     require(parts.map(p => new File(p._1).getCanonicalPath).distinct.size
       == parts.size, "duplicate table dirs in one transaction")
@@ -3143,7 +2938,7 @@ object TxLog {
     // transaction that aborts (or dies undecided) must still resolve a
     // schema — otherwise the table "exists" (version 0 claimed) but
     // read() throws "schema unrecoverable" forever (ADVICE r11 #3).
-    // The resolved view is identical on publish (resolveLines passes
+    // The resolved view is identical on publish (entryActions passes
     // raw non-xref lines through); the only visible difference is that
     // an aborted creation leaves a typed EMPTY table — createEmpty's
     // exact shape. EXISTING tables keep their schema lines in the tx
@@ -3156,18 +2951,15 @@ object TxLog {
     // — surviving an abort over the other writer's rows (review r12 #6)
     val claimed = scala.collection.mutable.ListBuffer.empty[(String, Int)]
     val published = scala.collection.mutable
-      .ListBuffer.empty[(String, Seq[String])]
+      .ListBuffer.empty[(String, Seq[LogAction])]
     try {
       parts.zipWithIndex.foreach { case ((dir, lines, expected), i) =>
         new File(dir).mkdirs()
         val cur = expected.getOrElse(currentVersion(dir))
         val (schema, data) =
-          if (cur < 0) lines.partition(_.startsWith("schema\t"))
-          else (Seq.empty[String], lines)
-        val rel = Paths.get(dir).toAbsolutePath.normalize()
-          .relativize(Paths.get(txRoot).toAbsolutePath.normalize())
-        val v = claimVersion(dir, cur + 1,
-          s"xref\t$rel${File.separator}$txName\t$i" +: schema)
+          if (cur < 0) lines.partition(_.isInstanceOf[Schema])
+          else (Seq.empty[LogAction], lines)
+        val v = claimVersion(dir, cur + 1, xref(dir, txRoot, txName, i) +: schema)
         claimed += ((dir, v))
         published += ((dir, data))
       }
@@ -3206,7 +2998,7 @@ object TxLog {
     * THE atomic commit point. The first body line is a `!tables`
     * header naming every participant (relative to `txRoot`) so
     * [[vacuumTxn]] can discover reference holders without being handed
-    * the list; [[resolveLines]]' key-prefix match never sees it.
+    * the list; [[entryActions]] only picks its own keyed actions.
     * Refuses if the transaction was already decided (published or
     * aborted). */
   /** Crash-injection seam for the publish-failure spec (the claimOnly
@@ -3217,18 +3009,13 @@ object TxLog {
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
   private[graft] def publishTx(txRoot: String, txName: String,
-      parts: Seq[(String, Seq[String])]): Unit = {
+      parts: Seq[(String, Seq[LogAction])]): Unit = {
     if (failNextPublish.getAndSet(false))
       throw new java.io.IOException("injected publish failure (spec seam)")
-    val header = "!tables\t" + parts.map { case (dir, _) =>
-      Paths.get(txRoot).toAbsolutePath.normalize()
-        .relativize(Paths.get(dir).toAbsolutePath.normalize()).toString
-    }.mkString("\t")
-    val body = header +: parts.zipWithIndex.flatMap { case ((_, lines), i) =>
-      lines.map(l => s"$i\t$l")
-    }
+    val body = txHeader(txRoot, parts.map(_._1)) +:
+      parts.zipWithIndex.flatMap { case ((_, acts), i) => acts.map(Keyed(i, _)) }
     val tmp = Files.createTempFile(Paths.get(txRoot), ".tx-", ".tmp")
-    Files.write(tmp, body.mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(tmp, LogAction.render(body))
     try Files.createLink(Paths.get(txRoot, txName), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -3257,13 +3044,8 @@ object TxLog {
     // operator abort writes an empty (headerless) file, which vacuumTxn
     // conservatively KEEPS forever rather than risking a reclaim that
     // flips an unscanned table's version back to UNDECIDED
-    if (participants.nonEmpty) {
-      val header = "!tables\t" + participants.map { dir =>
-        Paths.get(txRoot).toAbsolutePath.normalize()
-          .relativize(Paths.get(dir).toAbsolutePath.normalize()).toString
-      }.mkString("\t")
-      Files.write(tmp, (header + "\n").getBytes("UTF-8")): Unit
-    }
+    if (participants.nonEmpty)
+      Files.write(tmp, LogAction.render(Seq(txHeader(txRoot, participants)))): Unit
     try { Files.createLink(Paths.get(txRoot, txName), tmp); true }
     catch {
       case _: java.nio.file.FileAlreadyExistsException => false
@@ -3278,27 +3060,36 @@ object TxLog {
     * r11 #2). */
   private[graft] def versionUndecided(dir: String, v: Int): Boolean =
     Files.exists(versionFile(dir, v)) &&
-    fileLines(versionFile(dir, v)).exists { l =>
-      l.startsWith("xref\t") && (l.split('\t') match {
-        case Array(_, rel, _) => !new File(dir, rel).isFile
-        case _ => false
-      })
+    LogAction.read(versionFile(dir, v)).exists {
+      case Xref(rel, _) => !new File(dir, rel).isFile
+      case _ => false
     }
 
   /** The claim phase alone (crash-window spec hook): returns the
     * tx name + claimed versions WITHOUT publishing. */
   private[graft] def claimOnly(txRoot: String,
-      parts: Seq[(String, Seq[String])]): (String, Seq[Int]) = {
+      parts: Seq[(String, Seq[LogAction])]): (String, Seq[Int]) = {
     new File(txRoot).mkdirs()
     val txName = s"tx-${java.util.UUID.randomUUID().toString.take(12)}.txt"
     val vs = parts.zipWithIndex.map { case ((dir, _), i) =>
-      val rel = Paths.get(dir).toAbsolutePath.normalize()
-        .relativize(Paths.get(txRoot).toAbsolutePath.normalize())
       claimVersion(dir, currentVersion(dir) + 1,
-        Seq(s"xref\t$rel${File.separator}$txName\t$i"))
+        Seq(xref(dir, txRoot, txName, i)))
     }
     (txName, vs)
   }
+
+  /** The claim entry pointing table `dir` at its key in a tx file. */
+  private def xref(dir: String, txRoot: String, txName: String,
+      key: Int): Xref = {
+    val rel = Paths.get(dir).toAbsolutePath.normalize()
+      .relativize(Paths.get(txRoot).toAbsolutePath.normalize())
+    Xref(s"$rel${File.separator}$txName", key)
+  }
+
+  /** A tx file's participants header, paths relative to `txRoot`. */
+  private def txHeader(txRoot: String, dirs: Seq[String]): TxTables =
+    TxTables(dirs.map(dir => Paths.get(txRoot).toAbsolutePath.normalize()
+      .relativize(Paths.get(dir).toAbsolutePath.normalize()).toString))
 
   /** Atomically APPEND one frame per table (the fact+dims load): all
     * tables' new files become visible in the same instant or never.
@@ -3325,7 +3116,7 @@ object TxLog {
       val cur = currentVersion(dir)
       val removes =
         if (cur < 0) Seq.empty
-        else snapshot(dir, Some(cur)).map(f => s"remove\t$f")
+        else snapshot(dir, Some(cur)).map(Remove)
       (dir,
         removes ++ stageLinesEnforced(df.sparkSession, df, dir)._2 ++
           schemaLine(df, dir, exact = true),
@@ -3359,13 +3150,8 @@ object TxLog {
       refMemo.getOrElseUpdate(new File(dir).getCanonicalPath, {
         val files = Option(logDir(dir).listFiles()).getOrElse(Array.empty)
         files.filter(_.getName.endsWith(".txt")).flatMap { f =>
-          fileLines(f.toPath).collect {
-            case l if l.startsWith("xref\t") =>
-              l.split('\t') match {
-                case Array(_, rel, _) => Some(new File(rel).getName)
-                case _ => None
-              }
-          }.flatten
+          LogAction.read(f.toPath).collect {
+            case Xref(rel, _) => new File(rel).getName }
         }.toSet
       })
     val horizon = System.currentTimeMillis() - minAgeMs
@@ -3375,9 +3161,9 @@ object TxLog {
         && f.getName.endsWith(".txt") && f.lastModified() <= horizon)
     val victims = candidates.filter { f =>
       val headerTables: Option[Seq[String]] =
-        fileLines(f.toPath).headOption.filter(_.startsWith("!tables\t"))
-          .map(_.split('\t').drop(1).toSeq
-            .map(rel => new File(txRoot, rel).toString))
+        LogAction.read(f.toPath).headOption.collect {
+          case TxTables(rels) => rels.map(rel => new File(txRoot, rel).toString)
+        }
       headerTables match {
         case Some(ts) =>
           (ts ++ extraTables).forall(d => !refsOf(d).contains(f.getName))

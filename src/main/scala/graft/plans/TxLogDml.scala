@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.TxLog
+import graft.core.{LogAction, TxLog}
 import graft.sources.TxLogTable
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -582,7 +582,7 @@ object TxLogDml {
             .join(srcDf, cond, "left_semi")
         }
       // 2. rewrite the affected files
-      val rewrites: Seq[String] =
+      val rewrites: Seq[LogAction.Add] =
         if (affected.isEmpty) Seq.empty
         else {
           val aff = alignedTarget(spark,
@@ -628,7 +628,7 @@ object TxLogDml {
           } finally { joined.unpersist(): Unit }
         }
       // 3. inserts: source rows unmatched anywhere in the target
-      val inserts: Seq[String] =
+      val inserts: Seq[LogAction.Add] =
         if (notMatched.isEmpty) Seq.empty
         else {
           val unmatchedSrc =

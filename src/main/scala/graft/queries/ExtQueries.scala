@@ -5113,23 +5113,16 @@ object ExtQueries {
         TxLog.append(Tables.load(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_returnflag"),
             col("l_extendedprice").cast("double")), t) // v1
-        def lines(v: Int): Seq[String] =
-          new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(t, "_log", f"$v%08d.txt")), "UTF-8")
-            .linesIterator.filterNot(_.startsWith("ts\t")).toSeq
         // 1. partition-aligned DELETE: provably-covered files drop
         // from the log with no read at all
         s.sql("DELETE FROM graft_lake.q441p WHERE l_returnflag = 'R'")
-        val delLines = lines(TxLog.currentVersion(t))
-        val deleteMetadataOnly = delLines.nonEmpty &&
-          delLines.forall(_.startsWith("remove\t"))
+        val deleteMetadataOnly = TxLog.removesOnly(t, TxLog.currentVersion(t))
         // 2. partition-predicate UPDATE: victims confined to 'A' files
         val pvBefore = TxLog.partitionValues(t)
         s.sql("""UPDATE graft_lake.q441p SET l_extendedprice = 0.0
                  WHERE l_returnflag = 'A'""")
         val updScoped = {
-          val removed = lines(TxLog.currentVersion(t))
-            .filter(_.startsWith("remove\t")).map(_.split('\t')(1))
+          val removed = TxLog.changes(t, TxLog.currentVersion(t))._2
           removed.nonEmpty && removed.forall(f =>
             pvBefore.getOrElse(f, Map.empty)
               .get("l_returnflag").contains("A"))
@@ -5193,10 +5186,7 @@ object ExtQueries {
         li.createOrReplaceTempView("q442_src")
         def removedOnly(v: Int, part: String): Boolean = {
           val pv = TxLog.partitionValues(t, Some(v - 1))
-          val removed = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(t, "_log", f"$v%08d.txt")), "UTF-8")
-            .linesIterator.filter(_.startsWith("remove\t"))
-            .map(_.split('\t')(1)).toSeq
+          val removed = TxLog.changes(t, v)._2
           removed.nonEmpty && removed.forall(f =>
             pv.getOrElse(f, Map.empty).get("l_returnflag").contains(part))
         }
@@ -5501,12 +5491,7 @@ object ExtQueries {
         val preRows = TxLog.read(s, t).count()
         val preVersion = TxLog.currentVersion(t)
         s.sql("TRUNCATE TABLE graft_lake.q447t")
-        val tl = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(t, "_log",
-            f"${TxLog.currentVersion(t)}%08d.txt")), "UTF-8")
-          .linesIterator.filterNot(_.startsWith("ts\t")).toSeq
-        val metadataOnly = tl.nonEmpty &&
-          tl.forall(_.startsWith("remove\t"))
+        val metadataOnly = TxLog.removesOnly(t, TxLog.currentVersion(t))
         val emptied =
           s.sql("SELECT count(*) FROM graft_lake.q447t")
             .head().getLong(0) == 0L

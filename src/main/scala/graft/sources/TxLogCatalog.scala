@@ -5,7 +5,7 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
-import graft.core.TxLog
+import graft.core.{LogAction, TxLog}
 import org.apache.spark.sql.{DataFrame, SparkSession, SQLContext}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -126,7 +126,7 @@ class TxLogCatalog extends TableCatalog
     val partProp =
       if (partCols.isEmpty) Map.empty[String, String]
       else Map(TxLog.PartitionColsProp ->
-        TxLog.encodePartitionCols(partCols))
+        TxLog.encodeCols(partCols))
     TxLog.createEmpty(dir, schema, properties = userProps ++ partProp)
     new TxLogTable(dir, ident.toString)
   }
@@ -229,7 +229,7 @@ class TxLogCatalog extends TableCatalog
     val partProp =
       if (partCols.isEmpty) Map.empty[String, String]
       else Map(TxLog.PartitionColsProp ->
-        TxLog.encodePartitionCols(partCols))
+        TxLog.encodeCols(partCols))
     new TxLogStagedTable(tableDir(ident), ident.toString, schema,
       partCols, userProps ++ partProp, expectedVersion)
   }
@@ -566,7 +566,7 @@ class TxLogStagedTable(dir: String, ident: String,
     with SupportsWrite {
 
   private val names = scala.collection.mutable.Buffer.empty[String]
-  private val addLines = scala.collection.mutable.Buffer.empty[String]
+  private val addLines = scala.collection.mutable.Buffer.empty[LogAction.Add]
 
   override def name(): String = ident
   override def schema(): StructType = stagedSchema

@@ -395,30 +395,32 @@ object GraftProperties extends Properties("graft") {
   // unicode — or the line grammar silently corrupts table metadata
   property("log-line value escaping round-trips arbitrary strings") =
     forAll { (s: String) =>
-      val esc = graft.core.TxLog.escapeVal(s)
+      val esc = graft.core.LogAction.escapeVal(s)
       !esc.exists(c => c == '\t' || c == '\n' || c == '\r' || c == '=') &&
-        graft.core.TxLog.unescapeVal(esc) == s
+        graft.core.LogAction.unescapeVal(esc) == s
     }
 
   // the in-memory round-trip alone missed the r10 CR bug: linesIterator
-  // (what TxLog.fileLines uses) splits on \r too, so the contract must
+  // (what LogAction.read uses) splits on \r too, so the contract must
   // hold through a WRITTEN-then-read log line — the escaped marker
-  // survives the file grammar and parseAdd recovers the exact bounds
+  // survives the file grammar and the add decoder recovers the exact
+  // bounds
   property("escaped zone-map markers survive write-then-fileLines-read") =
     forAll { (lo: String, hi: String) =>
-      import graft.core.TxLog
-      val line = s"add\tf.parquet\ts:c=${TxLog.escapeVal(lo)}=" +
-        TxLog.escapeVal(hi)
+      import graft.core.LogAction
+      val line = s"add\tf.parquet\ts:c=${LogAction.escapeVal(lo)}=" +
+        LogAction.escapeVal(hi)
       val p = java.nio.file.Files.createTempFile("escprop_", ".txt")
       try {
         java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
         val read = new String(
           java.nio.file.Files.readAllBytes(p), "UTF-8")
           .linesIterator.filter(_.nonEmpty).toSeq
-        read == Seq(line) && {
-          val (f, _, _, ss) = TxLog.parseAdd(read.head)
-          f == "f.parquet" && ss.get("c").contains((lo, hi))
-        }
+        read == Seq(line) && (LogAction.decode(read.head) match {
+          case a: LogAction.Add =>
+            a.file == "f.parquet" && a.strStats.get("c").contains((lo, hi))
+          case _ => false
+        })
       } finally { java.nio.file.Files.deleteIfExists(p): Unit }
     }
 
@@ -489,10 +491,10 @@ object GraftProperties extends Properties("graft") {
             val parts = Seq(
               a -> TxLog.stageChecked(
                 spark.range(ia, ia + 1).selectExpr("id"), a)
-                .map(f => s"add\t$f"),
+                .map(graft.core.LogAction.Add(_)),
               b -> TxLog.stageChecked(
                 spark.range(ib, ib + 1).selectExpr("id"), b)
-                .map(f => s"add\t$f"))
+                .map(graft.core.LogAction.Add(_)))
             val (tx, _) = TxLog.claimOnly(s"$root/_txn", parts)
             TxLog.abortTx(s"$root/_txn", tx): Unit
           case 2 => // single-table appends interleave freely
@@ -502,10 +504,10 @@ object GraftProperties extends Properties("graft") {
             TxLog.commitAllLines(s"$root/_txn", Seq(
               a -> TxLog.stageChecked(
                 spark.range(ia, ia + 1).selectExpr("id"), a)
-                .map(f => s"add\t$f"),
+                .map(graft.core.LogAction.Add(_)),
               b -> TxLog.stageChecked(
                 spark.range(ib, ib + 1).selectExpr("id"), b)
-                .map(f => s"add\t$f")))
+                .map(graft.core.LogAction.Add(_))))
             expectA += ia; expectB += ib: Unit
         }
       }
@@ -513,10 +515,10 @@ object GraftProperties extends Properties("graft") {
       val pend = Seq(
         a -> TxLog.stageChecked(
           spark.range(next, next + 1).selectExpr("id"), a)
-          .map(f => s"add\t$f"),
+          .map(graft.core.LogAction.Add(_)),
         b -> TxLog.stageChecked(
           spark.range(next + 1, next + 2).selectExpr("id"), b)
-          .map(f => s"add\t$f"))
+          .map(graft.core.LogAction.Add(_)))
       TxLog.claimOnly(s"$root/_txn", pend): Unit
       val gotA = TxLog.read(spark, a).select("id").collect()
         .map(_.getLong(0)).toSet
@@ -581,7 +583,7 @@ object GraftProperties extends Properties("graft") {
         if (undecided) {
           val parts = Seq(t -> TxLog.stageChecked(
             spark.range(100L, 101L).selectExpr("id"), t)
-            .map(f => s"add\t$f"))
+            .map(graft.core.LogAction.Add(_)))
           TxLog.claimOnly(s"$root/_txn", parts): Unit
         }
         val lim = org.apache.spark.sql.connector.read.streaming

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.TxLog
+import graft.core.{LogAction, TxLog}
 import graft.sources.TxLogSourceIO
 
 /** The `format("txlog")` connector behaviors the oracle gate (q408)
@@ -482,7 +482,7 @@ class TxLogSourceSpec extends AnyFunSuite {
     // the same version the path API stalls at (shared TxLogOffsets)
     val staged = TxLog.stageChecked(
       spark.range(100L, 105L).select(col("id")), t)
-    val parts = Seq(t -> staged.map(f => s"add\t$f"))
+    val parts = Seq(t -> staged.map(LogAction.Add(_)))
     val (txName, _) = TxLog.claimOnly(s"$base/_txn", parts)
     TxLog.append(spark.range(60L, 70L).select(col("id")).coalesce(1), t)
     val sizes3 = drain()

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.core.TxLog
+import graft.core.{LogAction, TxLog}
 
 /** The transaction-log behaviors the oracle gate (q374/q375) cannot
   * see: optimistic-concurrency (exactly one winner per version), crash
@@ -645,8 +645,8 @@ class TxLogSpec extends AnyFunSuite {
       (101L to 150L).map(i => (i, i % 7 + 10)).toDF("id", "dk"), fact)
     val stagedD = TxLog.stageChecked(
       (10L to 16L).map(i => (i, s"d$i")).toDF("dk", "name"), dim)
-    val parts = Seq(fact -> stagedF.map(f => s"add\t$f"),
-      dim -> stagedD.map(f => s"add\t$f"))
+    val parts = Seq(fact -> stagedF.map(LogAction.Add(_)),
+      dim -> stagedD.map(LogAction.Add(_)))
     val (txName, _) = TxLog.claimOnly(s"$root/_txn", parts)
     // window: both tables still read the OLD state — the new files are
     // staged and the version entries exist, but resolve to nothing
@@ -671,7 +671,7 @@ class TxLogSpec extends AnyFunSuite {
     // and blocks checkpoints until an operator DECIDES it — abortTx
     // writes the empty tx file, one atomic create deciding ALL tables
     val (ghostTx, _) = TxLog.claimOnly(s"$root/_txn",
-      Seq(fact -> Seq("add\tghost.parquet"), dim -> Seq("add\tghost2.parquet")))
+      Seq(fact -> Seq(LogAction.Add("ghost.parquet")), dim -> Seq(LogAction.Add("ghost2.parquet"))))
     assert(TxLog.read(spark, fact).count() == 150L)
     assert(TxLog.read(spark, dim).count() == 14L)
     intercept[IllegalArgumentException] { TxLog.checkpoint(fact) }
@@ -680,7 +680,7 @@ class TxLogSpec extends AnyFunSuite {
     // publish after abort REFUSES — the decision is final
     intercept[java.util.ConcurrentModificationException] {
       TxLog.publishTx(s"$root/_txn", ghostTx,
-        Seq(fact -> Seq("add\tghost.parquet")))
+        Seq(fact -> Seq(LogAction.Add("ghost.parquet"))))
     }
     TxLog.checkpoint(fact) // unblocked; the aborted version is a no-op
     assert(TxLog.read(spark, fact).count() == 150L)
@@ -701,7 +701,7 @@ class TxLogSpec extends AnyFunSuite {
     val vBefore = TxLog.currentVersion(a)
     intercept[Throwable] {
       TxLog.commitAllLines(s"$root/_txn",
-        Seq(a -> Seq("add\tx.parquet"), broken -> Seq("add\ty.parquet")))
+        Seq(a -> Seq(LogAction.Add("x.parquet")), broken -> Seq(LogAction.Add("y.parquet"))))
     }
     // the rollback ABORTS the transaction (empty tx file): the claimed
     // entry stays as a harmless no-op version — deleting it would
@@ -800,7 +800,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.create((1L to 5L).map(i => (i, i)).toDF("id", "v"), t)
     val staged = TxLog.stageChecked(
       (6L to 9L).map(i => (i, i)).toDF("id", "v"), t)
-    val parts = Seq(t -> staged.map(f => s"add\t$f"))
+    val parts = Seq(t -> staged.map(LogAction.Add(_)))
     val (txName, _) = TxLog.claimOnly(s"$root/_txn", parts)
     val ex = intercept[IllegalArgumentException] {
       TxLog.shallowClone(t, s"$root/c")
@@ -876,7 +876,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.create((1L to 10L).map(i => (i, i)).toDF("id", "v"), t)
     val staged = TxLog.stageChecked(
       (11L to 20L).map(i => (i, i)).toDF("id", "v"), t)
-    val parts = Seq(t -> staged.map(f => s"add\t$f"))
+    val parts = Seq(t -> staged.map(LogAction.Add(_)))
     val (txName, _) = TxLog.claimOnly(s"$root/_txn", parts)
     val ex = intercept[IllegalArgumentException] {
       TxLog.vacuum(t, retainAfter = TxLog.currentVersion(t), minAgeMs = 0)
@@ -902,8 +902,8 @@ class TxLogSpec extends AnyFunSuite {
       spark.range(100L, 110L).selectExpr("id"), t)
     val stagedO = TxLog.stageChecked(
       spark.range(200L, 202L).selectExpr("id"), other)
-    val parts = Seq(t -> stagedT.map(f => s"add\t$f"),
-      other -> stagedO.map(f => s"add\t$f"))
+    val parts = Seq(t -> stagedT.map(LogAction.Add(_)),
+      other -> stagedO.map(LogAction.Add(_)))
     val (txName, _) = TxLog.claimOnly(s"$root/_txn", parts)
     // drain inside the claim window: the stream must stop BEFORE the
     // undecided version, not consume it as empty
@@ -1028,7 +1028,7 @@ class TxLogSpec extends AnyFunSuite {
     // abort file referenced by a's no-op version
     intercept[Throwable] {
       TxLog.commitAllLines(txRoot,
-        Seq(a -> Seq("add\tx.parquet"), broken -> Seq("add\ty.parquet")))
+        Seq(a -> Seq(LogAction.Add("x.parquet")), broken -> Seq(LogAction.Add("y.parquet"))))
     }
     assert(TxLog.vacuumTxn(txRoot, minAgeMs = 0).isEmpty,
       "a's raw xref entry still references the abort file")
@@ -1043,7 +1043,7 @@ class TxLogSpec extends AnyFunSuite {
     // a bare operator abort (participants unknown) stays forever —
     // reclaiming on a guess could flip an unscanned table's version
     // back to UNDECIDED
-    val (tx2, _) = TxLog.claimOnly(txRoot, Seq(a -> Seq("add\tz.parquet")))
+    val (tx2, _) = TxLog.claimOnly(txRoot, Seq(a -> Seq(LogAction.Add("z.parquet"))))
     TxLog.abortTx(txRoot, tx2)
     TxLog.append(Seq((10L, 10L)).toDF("id", "v"), a)
     val ck2 = TxLog.checkpoint(a)
@@ -1087,6 +1087,27 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.evolveSchema(t, StructType(prior.fields :+
       StructField("loose", LongType, nullable = true)))
     assert(TxLog.tableSchema(t).get.fieldNames.contains("loose"))
+    TxLog.drop(t)
+  }
+
+  test("the append type guard ignores nested nullability: a struct " +
+      "literal appends under a recorded struct, a real retype refuses") {
+    val t = java.nio.file.Files.createTempDirectory("txlog_nest_").toString
+    TxLog.drop(t)
+    // recorded s.a is NULLABLE (built from a conditional column)
+    TxLog.create(spark.range(3L).select(col("id"),
+      struct(when(col("id") > 0, col("id")).as("a")).as("s")), t)
+    // the literal batch's s.a is NON-nullable — same physical type
+    TxLog.append(spark.range(1L).select(lit(9L).as("id"),
+      struct(lit(7L).as("a")).as("s")), t)
+    assert(TxLog.read(spark, t).select("s.a").as[Option[Long]].collect()
+      .toSet == Set(None, Some(1L), Some(2L), Some(7L)))
+    // a genuine type change still refuses with the remedy
+    val e = intercept[IllegalArgumentException] {
+      TxLog.append(spark.range(1L).select(col("id").cast("string"),
+        struct(lit(7L).as("a")).as("s")), t)
+    }
+    assert(e.getMessage.contains("changes existing column type"))
     TxLog.drop(t)
   }
 
